@@ -60,19 +60,22 @@ object Bench {
     try SparkEntry.queries.headOption.foreach(_._2(spark, sfDir)
       .write.format("noop").mode("overwrite").save())
     catch { case _: Throwable => }
-    // untimed standing-index warm (ADVICE r14): the shared serve indexes
-    // memoize per-process, so without this the FIRST serve query paid the
-    // full build inside its timer and per-query numbers were run-order
-    // dependent. Production serves from a standing artifact; the build is
-    // ETL — priced in the ledgered-index ScaleSmoke rows, not here.
-    try {
-      graft.queries.TextQueries.warmSharedIndexes(spark, sfDir)
-      graft.queries.WarehouseQueries.warmSharedIndexes(spark, sfDir)
-      graft.queries.VectorQueries.warmSharedIndexes(spark, sfDir)
-      graft.queries.DedupQueries.warmSharedIndexes(spark, sfDir)
-      graft.queries.PipelineQueries.warmSharedIndexes(spark, sfDir)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] shared-index warm failed: ${e.getMessage}")
+    // untimed standing-artifact warm (ADVICE r14): the shared serve
+    // artifacts memoize per-process, so without this the FIRST serve query
+    // paid the full build inside its timer and per-query numbers were
+    // run-order dependent. Production serves from a standing artifact; the
+    // build is ETL — priced in the ledgered-index ScaleSmoke rows, not here.
+    // Each artifact is warmed and timed on its own: one failing build must
+    // not silently push every later build into a query timer.
+    val warmArtifacts = graft.queries.standingArtifacts.map { a =>
+      val t0 = System.nanoTime()
+      val ok =
+        try { a.get(spark, sfDir); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] standing artifact ${a.name} warm failed: ${e.getMessage}")
+          false
+        }
+      a.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     spark.catalog.clearCache()
     val warmSec = (System.nanoTime() - warmT0) / 1e9
@@ -155,12 +158,14 @@ object Bench {
     val qs = results.map(r => "\"" + r.name + "\":" + f3(r.sec)).mkString("{", ",", "}")
     val qn = results.map(r => "\"" + r.name + "\":" + f3(r.normSec)).mkString("{", ",", "}")
     val js = results.map(r => "\"" + r.name + "\":" + r.jobs).mkString("{", ",", "}")
+    val wa = warmArtifacts.map { case (n, v) => "\"" + n + "\":" + f3(v) }.mkString("{", ",", "}")
     val series = probes.map { case (t, v) => s"[$t,${f3(v)}]" }.mkString("[", ",", "]")
     // cpus + warm_sec ride in BOTH lines (VERDICT r16 item 2): cpus proves
     // the $SPARK_GRAFT_CPUS contract is honored run-by-run, warm_sec makes
-    // the untimed standing-artifact warm phase's real cost visible.
-    val summary = s"""{"total":${f3(total)},"n":${results.size},"failed":$failed,"cpus":$cpus,"warm_sec":${f3(warmSec)},"canary_start":${f3(canaryStart)},"canary_end":${f3(canaryEnd)}}"""
-    val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"queries_normalized":$qn,"jobs":$js,"failed":$failed,"reps":$reps,"cpus":$cpus,"warm_sec":${f3(warmSec)},"canary_start":${f3(canaryStart)},"canary_end":${f3(canaryEnd)},"canary_series":$series,"sf":"$sfDir"}"""
+    // the untimed standing-artifact warm phase's real cost visible, and
+    // warm_artifacts splits it per artifact (-1: that build failed).
+    val summary = s"""{"total":${f3(total)},"n":${results.size},"failed":$failed,"cpus":$cpus,"warm_sec":${f3(warmSec)},"warm_artifacts":$wa,"canary_start":${f3(canaryStart)},"canary_end":${f3(canaryEnd)}}"""
+    val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"queries_normalized":$qn,"jobs":$js,"failed":$failed,"reps":$reps,"cpus":$cpus,"warm_sec":${f3(warmSec)},"warm_artifacts":$wa,"canary_start":${f3(canaryStart)},"canary_end":${f3(canaryEnd)},"canary_series":$series,"sf":"$sfDir"}"""
     // Belt and braces for the driver's parser: summary first (short — a
     // truncated capture still parses), then the full JSON as the last
     // stdout line (sbt epilogue suppressed via showSuccess := false in

@@ -47,7 +47,7 @@ import org.apache.spark.sql.SparkSession
   *     cut alone would race an in-flight staging).
   *
   * Staleness contract: every call to [[publish]] builds a NEW version —
-  * memoize per process (the call sites do) to get exactly the
+  * memoize per process ([[Standing]] does) to get exactly the
   * rebuild-once-per-process semantics the in-place publisher had, so a
   * fixture regeneration between processes can never serve a stale
   * artifact. There is deliberately NO serve-if-any-version-exists
@@ -59,11 +59,11 @@ import org.apache.spark.sql.SparkSession
   * version therefore stays readable for at least `retain − 1`
   * subsequent publishes; fleets that republish continuously size
   * `retain` to their longest read — and a reader that CACHES its
-  * resolved dir (the per-JVM memoizing call sites do, for the process
+  * resolved dir ([[Standing]] does, for the process
   * lifetime) is a read of unbounded length: on a shared persistent
   * root, `retain` must cover the longest-lived reader process, or the
-  * reader must re-resolve when its cached path disappears (the call
-  * sites document this; in this repo every process publishes its own
+  * reader must re-resolve when its cached path disappears ([[Standing]]
+  * documents this; in this repo every process publishes its own
   * version on first touch and reads only that, so the interaction is
   * latent, not live).
   *

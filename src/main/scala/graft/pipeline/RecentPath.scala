@@ -28,16 +28,10 @@ object RecentPath {
 
   def run(activity: DataFrame, llm: LLMClient, embedder: Embedder,
       chunkSize: Int = 15): Outputs = {
-    // opt-in shared prefix (graft.pipeline.cachePrefix, default off): the
-    // memoized frame is already cached, so the flag-off branch below stays
-    // byte-identical to the historical path — pinned in PipelinePrefixSpec
-    val sessions =
-      if (PipelinePrefix.enabled(activity.sparkSession))
-        PipelinePrefix.embeddedSessions(activity, llm, embedder, chunkSize)
-      else SessionOps.withEmbeddings(
+    val sessions = SessionOps.withEmbeddings(
         SessionOps.withIds(Sessionize.sessions(activity, llm, chunkSize)),
         embedder)
-        .cache()
+      .cache()
     val thresholds = SessionOps.thresholds(sessions).cache()
     new Outputs(
       sessions,

@@ -327,7 +327,7 @@ object DedupQueries {
     * parameter — it fixes the number of signature columns — so it must
     * be known before the corpus job is planned, exactly as in
     * production) → the SHARED standing candidate artifact at those
-    * params ([[minhashCandShared]], r18 — q97 serves the same 8×1
+    * params ([[minhashCand]], r18 — q97 serves the same 8×1
     * frame) → in-bucket exact Jaccard ≥ t.
     * The oracle replays the planner argmin from first principles (same
     * unrolled truncating ppm chains as q251 — one shared SQL generator)
@@ -349,7 +349,7 @@ object DedupQueries {
     // drifted, the engine would serve different candidates (and emit a
     // different planned_b/planned_r) than the oracle's replay — a loud
     // hash mismatch, not a silent self-fulfilling gate
-    def p = candSharedLocal(8, 1)
+    def p = minhashCand8x1.localDir
     def curveSql = splits.map { case (b, r) =>
       s"""SELECT CAST($b AS BIGINT) AS b, CAST($r AS BIGINT) AS r, s_ppm,
          |       1000000 - ${graft.dedup.LshPlanner.missSql(b, r, "//")} AS p_ppm
@@ -390,7 +390,7 @@ object DedupQueries {
         s"planner must choose exactly one split, got ${chosen.length}")
       val (pb, pr) = (chosen(0).getLong(0).toInt, chosen(0).getLong(1).toInt)
       val docsDf = Tables.documents(s, d)
-      val served = minhashCandShared(s, d, bands = pb, rowsPerBand = pr)
+      val served = minhashCandAt(pb, pr).get(s, d)
       Dedup.jaccardVerify(s.read.parquet(served), docsDf, "doc_id", "text",
           threshold = 0.2)
         .select(lit(pb.toLong).as("planned_b"), lit(pr.toLong).as("planned_r"),
@@ -426,7 +426,7 @@ object DedupQueries {
     val hashCostPpm = 250000L
     // dump-time path resolution pins the a-priori argmin params (4, 2)
     // — same loud-on-drift contract as q254's comment above
-    def p = candSharedLocal(4, 2)
+    def p = minhashCand4x2.localDir
     def kCurveSql = ks.flatMap { k =>
       graft.dedup.LshPlanner.splitsOf(k).map { case (b, r) =>
         s"""SELECT CAST($k AS BIGINT) AS k, CAST($b AS BIGINT) AS b,
@@ -474,7 +474,7 @@ object DedupQueries {
         chosen(0).getLong(2).toInt)
       require(pk == pb.toLong * pr, s"argmin split inconsistent: ($pk, $pb, $pr)")
       val docsDf = Tables.documents(s, d)
-      val served = minhashCandShared(s, d, bands = pb, rowsPerBand = pr)
+      val served = minhashCandAt(pb, pr).get(s, d)
       Dedup.jaccardVerify(s.read.parquet(served), docsDf, "doc_id", "text",
           threshold = 0.5)
         .select(lit(pk).as("planned_k"), lit(pb.toLong).as("planned_b"),
@@ -643,38 +643,24 @@ object DedupQueries {
     * ([[graft.dedup.Dedup.minhashBandBuckets]]'s doc — persist once,
     * probe batches against it), so pricing the serve and amortizing
     * the build as ETL is the same accounting as postingsShared/
-    * coPurchaseShared. MVCC-published (`core.VersionedPublish`) so
-    * concurrent processes on one scratch root never tear a read;
-    * memoized per (process, sf, params) — retention caveat:
-    * see TextQueries.postingsSharedCache. Oracles resolve the live
-    * version via [[candSharedLocal]] at dump time. */
-  private val minhashCandServed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def minhashCandShared(s: org.apache.spark.sql.SparkSession,
-      d: String, bands: Int, rowsPerBand: Int): String = {
-    val root = graft.core.Scratch.dir(s"minhash_cand_${bands}x$rowsPerBand", d)
-    minhashCandServed.computeIfAbsent(root, p =>
-      graft.core.VersionedPublish.publish(s, p) { staging =>
-        Dedup.minhashLshCandidates(Tables.documents(s, d), "doc_id", "text",
-            bands = bands, rowsPerBand = rowsPerBand)
-          .write.parquet(staging)
-      })
-  }
-  /** Untimed warm hook for the bench harness — see
-    * [[graft.queries.TextQueries.warmSharedIndexes]]: builds the two
-    * standing banding-candidate artifacts (q56's 4×2 and q97/q254's
-    * 8×1; q258's plan lands on 4×2) so the serving queries' timers
-    * price the serve + verify, not the ETL build. */
-  def warmSharedIndexes(s: org.apache.spark.sql.SparkSession,
-      d: String): Unit = {
-    minhashCandShared(s, d, bands = 4, rowsPerBand = 2): Unit
-    minhashCandShared(s, d, bands = 8, rowsPerBand = 1): Unit
-  }
+    * coPurchaseShared. q56 serves 4×2, q97/q254 serve 8×1, and q258's
+    * plan lands on 4×2. Oracles read the committed version via
+    * `localDir`. */
+  private def minhashCand(bands: Int, rowsPerBand: Int) =
+    graft.core.Standing.parquet(s"minhash_cand_${bands}x$rowsPerBand") {
+      (s, d) => Dedup.minhashLshCandidates(Tables.documents(s, d), "doc_id",
+        "text", bands = bands, rowsPerBand = rowsPerBand)
+    }
+  private[queries] val minhashCand4x2 = minhashCand(4, 2)
+  private[queries] val minhashCand8x1 = minhashCand(8, 1)
 
-  private def candSharedLocal(bands: Int, rowsPerBand: Int): String = {
-    val root = graft.core.Scratch.lastDir(s"minhash_cand_${bands}x$rowsPerBand")
-    graft.core.VersionedPublish.currentDirLocal(root).getOrElse(root)
-  }
+  /** The standing candidate artifact at a planner-chosen split; a split
+    * without one is a MatchError (its oracle reads a fixed artifact). */
+  private def minhashCandAt(bands: Int, rowsPerBand: Int) =
+    (bands, rowsPerBand) match {
+      case (4, 2) => minhashCand4x2
+      case (8, 1) => minhashCand8x1
+    }
 
   /** UPGRADED from rows-only in round 7 (VERDICT r6 item 2 wording): the
     * engine-pinned LSH candidate pairs now pass through the scratch table,
@@ -683,9 +669,9 @@ object DedupQueries {
     * result set to the old direct form: the scratch round-trip only
     * materializes the candidate frame the join consumed anyway (since
     * r18 that frame is the shared standing artifact, built once per
-    * process and served to q56/q97/q254/q258 — [[minhashCandShared]]). */
+    * process and served to q56/q97/q254/q258 — [[minhashCand]]). */
   val q56MinhashLshPairs: QueryDef = {
-    def p = candSharedLocal(4, 2)
+    def p = minhashCand4x2.localDir
     QueryDef.sql(
       "q56_minhash_lsh_pairs",
       s"""WITH c AS (SELECT id_a, id_b FROM read_parquet('$p/*.parquet')),
@@ -701,7 +687,7 @@ object DedupQueries {
          |      / len(list_distinct(a.tok || b.tok)) >= 0.2
          |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
       val docsDf = Tables.documents(s, d)
-      val served = minhashCandShared(s, d, bands = 4, rowsPerBand = 2)
+      val served = minhashCand4x2.get(s, d)
       Dedup.jaccardVerify(s.read.parquet(served), docsDf, "doc_id", "text",
           threshold = 0.2)
         .select(col("id_a"), col("id_b"), oround(col("jaccard"), 6).as("jaccard"))
@@ -737,7 +723,7 @@ object DedupQueries {
     * config. Mechanism as q56: candidates through the scratch table,
     * DuckDB recomputes in-bucket Jaccard + threshold. */
   val q97MinhashVerify: QueryDef = {
-    def p = candSharedLocal(8, 1)
+    def p = minhashCand8x1.localDir
     QueryDef.sql(
       "q97_minhash_verify",
       s"""WITH c AS (SELECT id_a, id_b FROM read_parquet('$p/*.parquet')),
@@ -753,7 +739,7 @@ object DedupQueries {
          |      / len(list_distinct(a.tok || b.tok)) >= 0.1
          |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
       val docsDf = Tables.documents(s, d)
-      val served = minhashCandShared(s, d, bands = 8, rowsPerBand = 1)
+      val served = minhashCand8x1.get(s, d)
       Dedup.jaccardVerify(s.read.parquet(served), docsDf, "doc_id", "text",
           threshold = 0.1)
         .select(col("id_a"), col("id_b"), oround(col("jaccard"), 6).as("jaccard"))

@@ -109,33 +109,17 @@ object PipelineQueries {
     * (merge) and q52 (graph) price their STAGE over the standing frame;
     * q50 stays self-contained (the enrichment chain IS its subject and
     * its timer prices that ETL), as does q86 (its observe counters only
-    * fire when the enrichment plan actually executes — the
-    * PipelinePrefix contract). Oracles are unaffected: q51/q52 replay
-    * their whole stage from the dumped session frame, q50 from the
-    * snippet stream. Retention caveat:
-    * see TextQueries.postingsSharedCache. */
-  private val embSessServed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def embSessionsShared(s: SparkSession, d: String): DataFrame = {
-    val root = graft.core.Scratch.dir("embsessions_shared", d)
-    val served = embSessServed.computeIfAbsent(root, p =>
-      graft.core.VersionedPublish.publish(s, p) { staging =>
-        graft.operators.SessionOps.withEmbeddings(
-          graft.operators.SessionOps.withIds(
-            graft.operators.Sessionize.sessions(activity(s, d),
-              new StubSessionsLLM)),
-          new StubEmbedder)
-          .write.parquet(staging)
-      })
-    s.read.parquet(served)
-  }
-
-  /** Untimed warm hook for the bench harness — see
-    * [[graft.queries.TextQueries.warmSharedIndexes]]: materializes the
-    * enrichment boundary once so q51/q52's timers price their stage,
-    * not the LLM/embedding ETL. */
-  def warmSharedIndexes(s: SparkSession, d: String): Unit =
-    embSessionsShared(s, d): Unit
+    * fire when the enrichment plan actually executes). Oracles are
+    * unaffected: q51/q52 replay their whole stage from the dumped session
+    * frame, q50 from the snippet stream. */
+  private[queries] val embSessionsShared =
+    graft.core.Standing.parquet("embsessions_shared") { (s, d) =>
+      graft.operators.SessionOps.withEmbeddings(
+        graft.operators.SessionOps.withIds(
+          graft.operators.Sessionize.sessions(activity(s, d),
+            new StubSessionsLLM)),
+        new StubEmbedder)
+    }
 
   /** Array columns are flattened to CSV strings in the q50/q51/q53 outputs:
     * the driver's rows-only check sorts the frame in pandas, where
@@ -148,7 +132,7 @@ object PipelineQueries {
     * seconds-of-day codec, and the interests CSV — so the hash compare
     * covers everything between the LLM seam and the session frame
     * (utils/recent_history_utils.py:138-186). The Spark result still comes
-    * from the live enrichment path (PipelinePrefix → Sessionize). */
+    * from the live enrichment path (Sessionize). */
   val q50Sessions: QueryDef = {
     def p = graft.core.Scratch.lastDir("q50_pipeline_sessions")
     QueryDef.sql(
@@ -184,10 +168,7 @@ object PipelineQueries {
       graft.operators.Sessionize.validatedSnippets(act, new StubSessionsLLM)
         .select(col("user_id"), col("date"), col("snippet"))
         .write.mode("overwrite").parquet(s"$path/snippets")
-      // PipelinePrefix delegates straight to Sessionize.sessions unless the
-      // user opted into graft.pipeline.cachePrefix (then q50/q51/q52 share
-      // one materialized Sessionize pass)
-      graft.pipeline.PipelinePrefix.sessions(act, new StubSessionsLLM)
+      graft.operators.Sessionize.sessions(act, new StubSessionsLLM)
         .withColumn("interests", concat_ws(",", col("interests")))
         .withColumn("start_s", col("start_s").cast("long"))
         .withColumn("end_s", col("end_s").cast("long"))
@@ -259,7 +240,7 @@ object PipelineQueries {
          |FROM lbl
          |GROUP BY user_id, component
          |ORDER BY user_id, id""".stripMargin) { (s, d) =>
-      val sessions = embSessionsShared(s, d)
+      val sessions = s.read.parquet(embSessionsShared.get(s, d))
       val path = graft.core.Scratch.dir("q51_pipeline_merged", d)
       sessions
         .select(col("user_id"), col("id"), col("date"), col("start_s"),
@@ -331,7 +312,7 @@ object PipelineQueries {
          |FROM ranked r JOIN th USING (user_id)
          |WHERE rn = 1 AND sim_i9 > th_i9
          |ORDER BY user_id, parent_id""".stripMargin) { (s, d) =>
-      val sessions = embSessionsShared(s, d)
+      val sessions = s.read.parquet(embSessionsShared.get(s, d))
       val path = graft.core.Scratch.dir("q52_pipeline_graph", d)
       sessions
         .select(col("user_id"), col("id"), col("date"), col("start_s"),

@@ -1183,7 +1183,7 @@ object TextQueries {
     // served from the SHARED standing index's positional postings
     // (bucket-pruned scan) — identical anchor algebra to the corpus
     // path `PhraseSearch.phraseMatches`, which stays spec-pinned
-    postingsShared(s, d).phraseMatches(queries)
+    postingsShared.get(s, d).phraseMatches(queries)
       .orderBy(col("qid"), col("doc_id"))
   }
 
@@ -1238,7 +1238,7 @@ object TextQueries {
         array_join(slice(split(col("text"), " "), 1, 3), " ").as("phrase"))
     // positional postings come from the SHARED standing index, pruned to
     // the probe tokens' buckets (never a corpus posexplode at serve time)
-    val post = postingsShared(s, d).positionsFor(
+    val post = postingsShared.get(s, d).positionsFor(
       queries.select(explode(split(col("phrase"), " ")).as("tok")))
     val anchors = graft.text.PhraseSearch.phraseAnchors(post, queries)
     graft.text.PhraseSearch.snippets(anchors, dd, "doc_id", "text", window = 2)
@@ -1256,89 +1256,26 @@ object TextQueries {
     * impacts so every serve flavor (BM25, MaxScore, impact-ordered,
     * RM3, Jaccard, phrase) runs off the same artifact; the
     * build/merge/stream/MVCC queries (q218/q220/q223) keep
-    * self-contained indexes — their SUBJECT is the mutation.
-    *
-    * Publication is MVCC-versioned via `core.VersionedPublish`
-    * (immutable artifact dirs, atomic marker-file commit, readers
-    * resolve the highest marker — shared with coPurchaseShared/
-    * docIvfShared/embServeShared so the publish paths cannot drift).
-    * Concurrency contract: concurrent PROCESSES sharing one
-    * GRAFT_SCRATCH_DIR are SAFE — an open during a republish sees a
-    * complete old or complete new version, racing publishers converge
-    * (VersionedPublishSpec pins both); publish() builds fresh per
-    * process (never serves a stale corpus from a persistent root), and
-    * the per-JVM memoization keeps it to one build per process.
-    * RETENTION caveat (applies to every memoizing call site —
-    * docIvfCache, embServeCache, coPurchaseServed): the cached handle
-    * pins one artifact dir for the process lifetime, i.e. a read of
-    * unbounded length, while publish(retain = 2) lets two publishes
-    * from OTHER processes prune that dir. Here every process publishes
-    * its own version on first touch and reads only that (≤ 1 publish
-    * per process per root), so the cached dir is never older than
-    * retain − 1 publishes; a fleet that republishes continuously under
-    * long-lived readers must size `retain` to the longest reader or
-    * re-resolve the live version when the cached path disappears. */
-  private val postingsSharedCache =
-    scala.collection.mutable.Map[String, graft.text.PostingsIndex]()
+    * self-contained indexes — their SUBJECT is the mutation. The opened
+    * instance is the memoized handle, so its table-handle memo is shared
+    * by every serve. */
+  private[queries] val postingsShared = new graft.core.Standing("postings_shared")(
+    (s, d, staging) =>
+      graft.text.PostingsIndex.build(docs(s, d), staging, "doc_id", "text",
+          nBuckets = 16, withBounds = true, withPositions = true)
+        .buildImpacts(): Unit)(
+    graft.text.PostingsIndex.open(_, _))
 
   /** Shared read-only IVF index over the deterministic md5-window
     * document embeddings (q224's vec ranker) — the postingsShared
-    * pattern applied to the vector side: one build per (process, sf),
-    * atomic publish, cached instance. Mutating IVF queries (q36/q94/
+    * pattern applied to the vector side. Mutating IVF queries (q36/q94/
     * q106/q233) keep self-contained indexes — their subject is the
-    * build/upsert. Retention caveat: see [[postingsSharedCache]]. */
-  private val docIvfCache =
-    scala.collection.mutable.Map[String, graft.sources.IvfIndex]()
-  private def docIvfShared(s: SparkSession, d: String,
-      demb: => DataFrame): graft.sources.IvfIndex = {
-    val path = graft.core.Scratch.dir("docemb_ivf_shared", d)
-    docIvfCache.synchronized {
-      docIvfCache.getOrElseUpdate(path, {
-        // MVCC publication (VERDICT r14 missing #1): immutable artifact
-        // dirs + marker-file commit + highest-marker resolution, so
-        // concurrent PROCESSES on one scratch root read a complete old
-        // or new artifact, never a torn one (VersionedPublishSpec)
-        val served = graft.core.VersionedPublish.publish(s, path) {
-          staging =>
-            graft.sources.IvfIndex.build(demb, staging, "doc_id", "emb",
-              nCentroids = 8, iters = 1): Unit
-        }
-        new graft.sources.IvfIndex(s, served)
-      })
-    }
-  }
-  private def postingsShared(s: SparkSession, d: String): graft.text.PostingsIndex = {
-    val path = graft.core.Scratch.dir("postings_shared", d)
-    postingsSharedCache.synchronized {
-      postingsSharedCache.getOrElseUpdate(path, {
-        // MVCC publication — see docIvfShared; the per-JVM memoization
-        // stays (serves pay no repeated resolution/meta read), but the
-        // on-disk artifact is now safe under multi-process sharing
-        val served = graft.core.VersionedPublish.publish(s, path) {
-          staging =>
-            graft.text.PostingsIndex.build(docs(s, d), staging, "doc_id",
-                "text", nBuckets = 16, withBounds = true, withPositions = true)
-              .buildImpacts()
-        }
-        graft.text.PostingsIndex.open(s, served)
-      })
-    }
-  }
-
-  /** Untimed warm hook for the bench harness (ADVICE r14): the shared
-    * standing indexes memoize per-process, so whichever serve query ran
-    * FIRST paid the full build inside its timer — per-query bench numbers
-    * were run-order dependent. Bench calls this in its setup phase so
-    * every serve query prices the steady state (the build is ETL, the
-    * same accounting coPurchaseShared already documents). Verify does
-    * NOT call it — correctness oracles recompute from the corpus. */
-  def warmSharedIndexes(s: SparkSession, d: String): Unit = {
-    postingsShared(s, d): Unit
-    val demb = docs(s, d).select(col("doc_id"),
-      array((0 until 16).map(docEmbedDim): _*).as("emb"))
-    docIvfShared(s, d, demb): Unit
-    rankerListsShared(s, d): Unit
-  }
+    * build/upsert. */
+  private[queries] val docIvfShared = new graft.core.Standing("docemb_ivf_shared")(
+    (s, d, staging) =>
+      graft.sources.IvfIndex.build(docEmb(docs(s, d)), staging, "doc_id",
+        "emb", nCentroids = 8, iters = 1): Unit)(
+    new graft.sources.IvfIndex(_, _))
 
   /** STANDING postings index serve — `text.PostingsIndex` closes the
     * retrieval shelf's rebuild-per-run gap (VERDICT r12 missing #1): the
@@ -1454,7 +1391,7 @@ object TextQueries {
     "q222_rm3_index",
     rm3RebuildSql) { (s, d) =>
     val dd = docs(s, d)
-    val idx = postingsShared(s, d)
+    val idx = postingsShared.get(s, d)
     val expanded = idx.rm3ExpandedTerms(rm3Probes(dd), dd, "doc_id", "text",
       k = 10, fbDocs = 5, fbTerms = 5)
     idx.bm25TopK(expanded, k = 10)
@@ -1549,7 +1486,7 @@ object TextQueries {
   val q216PostingsServe: QueryDef = sql(
     "q216_postings_serve",
     postingsRebuildServeSql) { (s, d) =>
-    serveFromPostingsIndex(docs(s, d), postingsShared(s, d))
+    serveFromPostingsIndex(docs(s, d), postingsShared.get(s, d))
   }
 
   /** RETRIEVAL-INDEX MAINTENANCE — closes the postings index's
@@ -1876,6 +1813,10 @@ object TextQueries {
       16, 10).cast("long") % 2001) - 1000).cast("double") / lit(1000.0)
   }
 
+  /** The 16-dim document embedding frame (doc_id, emb) over [[docEmbedDim]]. */
+  private def docEmb(dd: DataFrame): DataFrame =
+    dd.select(col("doc_id"), array((0 until 16).map(docEmbedDim): _*).as("emb"))
+
   /** Ranked lists + relevance flags under the one-vs-rest lang weak
     * supervision — the engine twin of the `flagged` CTE, shared by the
     * precision (q214/q224) and RBP (q229) grading tails. */
@@ -2029,25 +1970,16 @@ object TextQueries {
 
   /** The five recomputed-from-corpus ranker lists (ranker, qid, doc_id,
     * rank) — q214's chains, shared with the q229 RBP and q237 nDCG
-    * gradings. Served through [[rankerListsShared]]: retrieval evals
+    * gradings, served as a standing artifact: retrieval evals
     * consume RUN FILES (the TREC discipline — rankers run once, every
     * metric grades the same persisted lists; cross-metric comparability
     * REQUIRES one list surface), so the five chains are built once per
-    * (process, sf) and MVCC-published, and each eval query prices its
-    * METRIC over the standing runs. The oracles are unaffected — all
-    * three replay the full five-ranker surface from the corpus
-    * (retrievalListsSql), so a drifted run file hash-mismatches every
-    * consumer. Retention caveat: see [[postingsSharedCache]]. */
-  private val rankerListsServed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def rankerListsShared(s: SparkSession, d: String): DataFrame = {
-    val root = graft.core.Scratch.dir("ranker_lists_shared", d)
-    val served = rankerListsServed.computeIfAbsent(root, p =>
-      graft.core.VersionedPublish.publish(s, p) { staging =>
-        recomputedRankerLists(s, d).write.parquet(staging)
-      })
-    s.read.parquet(served)
-  }
+    * (process, sf) and each eval query prices its METRIC over the
+    * standing runs. The oracles are unaffected — all three replay the
+    * full five-ranker surface from the corpus (retrievalListsSql), so a
+    * drifted run file hash-mismatches every consumer. */
+  private[queries] val rankerListsShared =
+    graft.core.Standing.parquet("ranker_lists_shared")(recomputedRankerLists)
 
   private def recomputedRankerLists(s: SparkSession, d: String): DataFrame = {
     val probes = docs(s, d).filter(col("doc_id") < 5)
@@ -2081,8 +2013,7 @@ object TextQueries {
     // — vector retrieval graded on the SAME weak-supervision ground
     // truth as the lexical rankers, the comparison a hybrid-serving
     // owner makes before choosing what to fuse
-    val demb = docs(s, d).select(col("doc_id"),
-      array((0 until 16).map(docEmbedDim): _*).as("emb"))
+    val demb = docEmb(docs(s, d))
     val wv = Window.partitionBy(col("qid"))
       .orderBy(col("sim_ppb").desc, col("doc_id"))
     val vec = broadcast(demb.filter(col("doc_id") < 5)
@@ -2112,7 +2043,7 @@ object TextQueries {
   val q214RetrievalEval: QueryDef = sql(
     "q214_retrieval_eval",
     retrievalEvalSql) { (s, d) =>
-    gradeRankers(docs(s, d), rankerListsShared(s, d))
+    gradeRankers(docs(s, d), s.read.parquet(rankerListsShared.get(s, d)))
   }
 
   /** Rank-biased precision (Moffat & Zobel TOIS 2008) at persistence
@@ -2136,7 +2067,7 @@ object TextQueries {
         |FROM flagged
         |GROUP BY ranker, qid
         |ORDER BY ranker, qid""".stripMargin) { (s, d) =>
-    flaggedLists(docs(s, d), rankerListsShared(s, d))
+    flaggedLists(docs(s, d), s.read.parquet(rankerListsShared.get(s, d)))
       .groupBy(col("ranker"), col("qid"))
       .agg(
         sum(expr("rel * shiftleft(1, 10 - rank)")).as("rbp_scaled"),
@@ -2194,7 +2125,7 @@ object TextQueries {
         |ORDER BY f.ranker, f.qid""".stripMargin) { (s, d) =>
     val dd = docs(s, d)
     val lc = dd.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
-    flaggedLists(dd, rankerListsShared(s, d))
+    flaggedLists(dd, s.read.parquet(rankerListsShared.get(s, d)))
       .join(broadcast(lc.select(col("lang").as("q_lang"), col("n_lang"))),
         "q_lang")
       .groupBy(col("ranker"), col("qid"))
@@ -2346,7 +2277,7 @@ object TextQueries {
     "q224_indexed_retrieval_eval",
     retrievalEvalSql) { (s, d) =>
     val dd = docs(s, d)
-    val idx = postingsShared(s, d)
+    val idx = postingsShared.get(s, d)
     val probes = dd.filter(col("doc_id") < 5)
       .select(col("doc_id").as("qid"),
         explode(slice(split(col("text"), " "), 1, 8)).as("tok"))
@@ -2358,8 +2289,8 @@ object TextQueries {
     // ranker, rrf input, rm3 feedback, and rm3's own probedBuckets
     // collect): localCheckpoint pins the tiny result so the eager collect
     // inside the RM3 chain doesn't evaluate a full serve that the final
-    // action then recomputes — measured 21.1 → 15.7s warm at sf0.1
-    // (ProfQ224). A tiny materialized list is exactly the case where
+    // action then recomputes — measured 21.1 → 15.7s warm at sf0.1.
+    // A tiny materialized list is exactly the case where
     // pinning CANNOT hurt exchange reuse (the q203 counter-lesson was a
     // corpus-sized cache).
     val bm25full = idx.bm25TopK(probes, k = 10, probedOnce)
@@ -2376,13 +2307,12 @@ object TextQueries {
     val rm3 = idx.bm25TopK(idx.rm3ExpandedTermsFrom(bm25full, probes, dd,
         "doc_id", "text", fbDocs = 5, fbTerms = 5), k = 10)
       .select(col("qid"), col("doc_id"), col("rank"))
-    val demb = dd.select(col("doc_id"),
-      array((0 until 16).map(docEmbedDim): _*).as("emb"))
+    val demb = docEmb(dd)
     // the vec ranker's IVF index is read-only here — shared per
     // (process, sf) like the postings index (second bench rep and any
     // later consumer serve build-free); the mutating IVF queries
     // (q106/q233) keep their own indexes
-    val vidx = docIvfShared(s, d, demb)
+    val vidx = docIvfShared.get(s, d)
     // simDecimals=9 ranks on the 1e-9 grid — the same total order as
     // q214's fixed_point(cos, 1e9) key (both land on round(sim·1e9)),
     // and SOUND because IvfIndex preserves the double element type: a
@@ -2443,7 +2373,7 @@ object TextQueries {
       |WHERE rank <= 10
       |ORDER BY qid, rank""".stripMargin) { (s, d) =>
     val dd = docs(s, d)
-    val idx = postingsShared(s, d)
+    val idx = postingsShared.get(s, d)
     val probes = dd.filter(col("doc_id") < 8)
       .select(col("doc_id").as("qid"),
         explode(slice(split(col("text"), " "), 1, 8)).as("tok"))
@@ -2495,7 +2425,7 @@ object TextQueries {
       |WHERE rank <= 10
       |ORDER BY qid, rank""".stripMargin) { (s, d) =>
     val dd = docs(s, d)
-    val idx = postingsShared(s, d)
+    val idx = postingsShared.get(s, d)
     val probes = dd.filter(col("doc_id") < 6)
       .select(col("doc_id").as("qid"),
         explode(slice(split(col("text"), " "), 1, 8)).as("tok"))
@@ -2685,7 +2615,7 @@ object TextQueries {
           explode(slice(split(col("text"), " "), 1, 8)).as("tok"))
         .distinct()
       // stage 1: the shared standing index retrieves, MaxSim only re-ranks
-      val cands = postingsShared(s, d).bm25TopK(probes, k = 30)
+      val cands = postingsShared.get(s, d).bm25TopK(probes, k = 30)
         .select(col("qid"), col("doc_id"))
       def withEmb(df: DataFrame, tokCol: String): DataFrame =
         (0 until 8).foldLeft(df)((acc, j) =>

@@ -688,45 +688,24 @@ object VectorQueries {
     * serve shelf (VERDICT r14 next-round #1): the IVFADC coarse
     * quantizer plus the PQ codebook/codes are read-only serve state —
     * production trains/encodes once (ETL) and serves every query from
-    * the standing artifact. Built once per (process, sf) and published
-    * MVCC-style (`core.VersionedPublish`: immutable artifact dirs,
-    * atomic marker-file commit, highest-committed resolution — safe
-    * under multi-process scratch sharing). The MUTATING vector-index
-    * queries (q36/q94/q106/q233) and the train-is-the-subject queries
-    * (q128, q154) keep self-contained builds. Retention caveat: see
-    * [[graft.queries.TextQueries]]'s postingsSharedCache note. */
-  private val embServeCache =
-    scala.collection.mutable.Map[String, (graft.sources.IvfIndex, String)]()
-  private def embServeShared(s: SparkSession, d: String)
-      : (graft.sources.IvfIndex, String) = {
-    import graft.similarity.Pq
-    val root = graft.core.Scratch.dir("embserve_shared", d)
-    embServeCache.synchronized {
-      embServeCache.getOrElseUpdate(root, {
-        val served = graft.core.VersionedPublish.publish(s, root) {
-          staging =>
-            val e = emb(s, d)
-            graft.sources.IvfIndex.build(e, s"$staging/ivf", "vec_id",
-              "embedding", nCentroids = 8, iters = 1): Unit
-            val cb = Pq.train(e, "vec_id", "embedding", dim = 64,
-              m = 4, nCodes = 16, iters = 2)
-            cb.coalesce(1).write.parquet(s"$staging/codebook")
-            cb.unpersist(): Unit
-            Pq.encode(e, "vec_id", "embedding", 64,
-                s.read.parquet(s"$staging/codebook"))
-              .write.parquet(s"$staging/codes")
-        }
-        (new graft.sources.IvfIndex(s, s"$served/ivf"), served)
-      })
-    }
-  }
-
-  /** Untimed warm hook for the bench harness — see
-    * [[graft.queries.TextQueries.warmSharedIndexes]]: builds the
-    * standing IVFADC serve artifact (coarse IVF + PQ codebook/codes)
-    * once so q132's timer prices the serve, not the ETL build. */
-  def warmSharedIndexes(s: SparkSession, d: String): Unit =
-    embServeShared(s, d): Unit
+    * the standing artifact. The MUTATING vector-index queries
+    * (q36/q94/q106/q233) and the train-is-the-subject queries (q128,
+    * q154) keep self-contained builds. The handle is the coarse index
+    * plus the committed dir holding `codebook/` and `codes/`. */
+  private[queries] val embServeShared =
+    new graft.core.Standing("embserve_shared")({ (s, d, staging) =>
+      import graft.similarity.Pq
+      val e = emb(s, d)
+      graft.sources.IvfIndex.build(e, s"$staging/ivf", "vec_id",
+        "embedding", nCentroids = 8, iters = 1): Unit
+      val cb = Pq.train(e, "vec_id", "embedding", dim = 64,
+        m = 4, nCodes = 16, iters = 2)
+      cb.coalesce(1).write.parquet(s"$staging/codebook")
+      cb.unpersist(): Unit
+      Pq.encode(e, "vec_id", "embedding", 64,
+          s.read.parquet(s"$staging/codebook"))
+        .write.parquet(s"$staging/codes")
+    })((s, served) => (new graft.sources.IvfIndex(s, s"$served/ivf"), served))
 
   /** IVFADC — the FAISS coarse+fine serve architecture composed from the
     * verified halves: the COARSE quantizer is the persisted IVF index
@@ -746,13 +725,7 @@ object VectorQueries {
     * ADC-from-artifacts by q128). */
   val q132IvfAdcServe: QueryDef = {
     def p = graft.core.Scratch.lastDir("q132_ivfadc_serve")
-    def shared = {
-      val root = graft.core.Scratch.lastDir("embserve_shared")
-      // resolve the live MVCC version locally (no SparkSession at oracle
-      // build time); a never-published root surfaces as a missing-path
-      // failure in Verify's fail-fast scratch check
-      graft.core.VersionedPublish.currentDirLocal(root).getOrElse(root)
-    }
+    def shared = embServeShared.localDir
     sql(
       "q132_ivfadc_serve",
       s"""WITH cb AS (SELECT sub, code, CAST(cvec AS DOUBLE[]) AS cvec
@@ -797,7 +770,7 @@ object VectorQueries {
       import graft.similarity.Pq
       val e = emb(s, d)
       val path = graft.core.Scratch.dir("q132_ivfadc_serve", d)
-      val (idx, served) = embServeShared(s, d)
+      val (idx, served) = embServeShared.get(s, d)
       val q = e.filter(col("vec_id") < 5)
       idx.candidates(q, "vec_id", "embedding", nprobe = 2)
         .write.mode("overwrite").parquet(s"$path/candidates")

@@ -688,33 +688,8 @@ object WarehouseQueries {
     * per-query numbers price the SERVE from the materialized view, the
     * production steady state (the build is ETL, the same accounting as
     * the ledgered-index smoke rows). */
-  private val coPurchaseServed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def coPurchaseShared(s: SparkSession, d: String): DataFrame = {
-    val path = graft.core.Scratch.dir("copurchase_pairs", d)
-    // MVCC publication (core.VersionedPublish — shared with
-    // postingsShared/docIvfShared/embServeShared): immutable artifact
-    // dirs, atomic marker-file commit, readers resolve the highest
-    // marker. Concurrent PROCESSES on one GRAFT_SCRATCH_DIR are safe:
-    // an open during a republish sees a complete old or new version
-    // (VersionedPublishSpec pins the contract); publish() builds fresh
-    // per process, memoized here to one build per JVM. Retention
-    // caveat: see TextQueries.postingsSharedCache.
-    val served = coPurchaseServed.computeIfAbsent(path, p =>
-      graft.core.VersionedPublish.publish(s, p) { staging =>
-        coPurchasePairs(s, d).write.parquet(staging)
-      })
-    s.read.parquet(served)
-  }
-
-  /** Untimed warm hook for the bench harness (ADVICE r14) — see
-    * [[graft.queries.TextQueries.warmSharedIndexes]]: builds the
-    * materialized co-purchase pairs once so the first consumer's timer
-    * prices the serve, not the ETL build. */
-  def warmSharedIndexes(s: SparkSession, d: String): Unit = {
-    coPurchaseShared(s, d): Unit
-    hyperBallPestShared(s, d): Unit
-  }
+  private[queries] val coPurchaseShared =
+    graft.core.Standing.parquet("copurchase_pairs")(coPurchasePairs)
 
   /** The same projection as a one-line SQL fragment (single-line so it
     * embeds in any stripMargin template without the nested-`|` trap). */
@@ -731,24 +706,16 @@ object WarehouseQueries {
     * every centrality-family readout from them. Built once per
     * (process, sf) from [[coPurchaseShared]] and MVCC-published; both
     * oracles replay the full register chain from lineitem, so a drifted
-    * artifact mismatches both consumers. Retention caveat: see
-    * TextQueries.postingsSharedCache. */
-  private val hyperBallPestServed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def hyperBallPestShared(s: SparkSession, d: String): DataFrame = {
-    val root = graft.core.Scratch.dir("hyperball_pest_shared", d)
-    val served = hyperBallPestServed.computeIfAbsent(root, p =>
-      graft.core.VersionedPublish.publish(s, p) { staging =>
-        val pe = coPurchaseShared(s, d)
-        val edges = pe.select(col("a").as("src"), col("b").as("dst"))
-          .unionByName(pe.select(col("b").as("src"), col("a").as("dst")))
-        graft.graph.GraphOps.ballEstMilli(
-            graft.graph.GraphOps.hyperBallRegisters(edges, rounds = 2,
-              p = 4, salt = "hb-v1"))
-          .write.parquet(staging)
-      })
-    s.read.parquet(served)
-  }
+    * artifact mismatches both consumers. */
+  private[queries] val hyperBallPestShared =
+    graft.core.Standing.parquet("hyperball_pest_shared") { (s, d) =>
+      val pe = s.read.parquet(coPurchaseShared.get(s, d))
+      val edges = pe.select(col("a").as("src"), col("b").as("dst"))
+        .unionByName(pe.select(col("b").as("src"), col("a").as("dst")))
+      graft.graph.GraphOps.ballEstMilli(
+        graft.graph.GraphOps.hyperBallRegisters(edges, rounds = 2,
+          p = 4, salt = "hb-v1"))
+    }
 
   /** HyperBall neighborhood function (Boldi–Vigna 2013) over the
     * co-purchase graph — `GraphOps.hyperBallRegisters`: per-part HLL
@@ -830,7 +797,7 @@ object WarehouseQueries {
     // q203 adjudication: exchange reuse already shares the self-join
     // across rounds; pinning ADDS a serialization barrier — uncached
     // 6.1s / localCheckpoint 6.7s warm at sf0.1)
-    val perNode = hyperBallPestShared(s, d)
+    val perNode = s.read.parquet(hyperBallPestShared.get(s, d))
     val tot = perNode.groupBy(col("radius"))
       .agg(count(lit(1)).as("radius_nodes"),
         expr("CAST(sum(CAST(est_milli AS DECIMAL(38,0))) AS LONG)")
@@ -883,7 +850,7 @@ object WarehouseQueries {
     import org.apache.spark.sql.expressions.Window
     // the q238-shared standing ball-estimate artifact, pivoted (r18)
     val top = graft.graph.GraphOps
-      .harmonicX2MilliFromEst(hyperBallPestShared(s, d))
+      .harmonicX2MilliFromEst(s.read.parquet(hyperBallPestShared.get(s, d)))
       .orderBy(col("harm_x2_milli").desc, col("id")).limit(25)
     // rank assignment runs over the 25 collected rows only — the global
     // sort was already TakeOrderedAndProject
@@ -1367,7 +1334,7 @@ object WarehouseQueries {
     // starvation. Fixed in GraphOps.triangleCounts (shuffle_hash joins,
     // one explode pass): warm 16.5→4.9s quiet / 20.1→7.9s under 2x
     // synthetic load, spill 3.0 GB → 0 (ProfTaskMetrics, BASELINE.md).
-    val pe = coPurchaseShared(s, d)
+    val pe = s.read.parquet(coPurchaseShared.get(s, d))
     val pn = graft.graph.GraphOps.triangleCounts(pe)
     val tot = pn.agg(expr("sum(tri) div 3").as("n_tri"))
     val m = pe.agg(count(lit(1)).as("n_edges"))
@@ -1421,7 +1388,7 @@ object WarehouseQueries {
        |       nc.n_core, mc.m_core, cv.converged
        |FROM d12, kk, nc, mc, cv
        |ORDER BY d12.deg DESC, d12.id LIMIT 50""".stripMargin) { (s, d) =>
-    val pe = coPurchaseShared(s, d).cache()
+    val pe = s.read.parquet(coPurchaseShared.get(s, d)).cache()
     // ONE action for both graph stats (was a count + a distinct-count =
     // two driver round-trips): exploded endpoints give 2m as the row
     // count and n as the distinct count — exact, and k's integer

@@ -34,4 +34,18 @@ package object queries {
     * wall-clock as UTC — matches DuckDB `epoch_ms(ts)` on naive timestamps.
     * (Session timezone is pinned to UTC by Verify/Bench/tests.) */
   def epochMs(c: Column): Column = unix_millis(c.cast("timestamp"))
+
+  /** Every standing artifact the query modules serve from, in dependency
+    * order (hyperBallPestShared builds from coPurchaseShared). Bench warms
+    * them in this order; a new `core.Standing` value must be listed here. */
+  lazy val standingArtifacts: Seq[graft.core.Standing[_]] = Seq(
+    TextQueries.postingsShared,
+    TextQueries.docIvfShared,
+    TextQueries.rankerListsShared,
+    WarehouseQueries.coPurchaseShared,
+    WarehouseQueries.hyperBallPestShared,
+    VectorQueries.embServeShared,
+    DedupQueries.minhashCand4x2,
+    DedupQueries.minhashCand8x1,
+    PipelineQueries.embSessionsShared)
 }

@@ -563,7 +563,7 @@ final class PostingsIndex(spark: SparkSession, path: String, nBuckets: Int) {
     // list, PlanAuditSpec's bound) where the previous join shuffled the
     // corpus against 25 rows, and (2) the expansion's lineage no longer
     // contains the first-pass serve, so downstream actions stop
-    // re-evaluating it (measured 12.2 → ~10s warm at sf0.1, ProfQ224).
+    // re-evaluating it (q224 measured 12.2 → ~10s warm at sf0.1).
     val fbPairs = firstPass
       .filter(col("rank") <= fbDocs)
       .select(col("qid"), col("doc_id"))

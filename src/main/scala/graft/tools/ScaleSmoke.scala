@@ -829,8 +829,8 @@ object ScaleSmoke {
         // the amplification curve itself: bytes of the just-committed
         // version vs the standing version — both index-sized, so their
         // ratio is ~1 at every k while the BATCH stays 1×-sized
-        println(f"""{"op":"versioned_merge_written_mb","scale":$k,"rows_in":${n0 * k},"sec":${vDirMb(s"$vPath/v1")}%.1f}""")
-        println(f"""{"op":"versioned_standing_mb","scale":$k,"rows_in":${n0 * k},"sec":${vDirMb(s"$vPath/v0")}%.1f}""")
+        println(f"""{"op":"versioned_merge_written_mb","scale":$k,"rows_in":${n0 * k},"mb":${vDirMb(s"$vPath/v1")}%.1f}""")
+        println(f"""{"op":"versioned_standing_mb","scale":$k,"rows_in":${n0 * k},"mb":${vDirMb(s"$vPath/v0")}%.1f}""")
         t0 = System.nanoTime()
         require(!vIdx.mergeOnce(vBatch, "doc_id", "text", 1L))
         println(f"""{"op":"versioned_redelivery","scale":$k,"rows_in":${n0 * k},"sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
