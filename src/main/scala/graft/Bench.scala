@@ -27,11 +27,28 @@ import org.apache.spark.sql.SparkSession
   *      compute-bound is distinguishable post hoc. Attribution uses job
   *      groups (not a reset-between-queries counter), so the async
   *      listener bus cannot bleed counts across query boundaries.
+  *
+  * Each query also gets a `layers` object (core.JobMetrics: jobs, stages,
+  * tasks, executor CPU/GC s, shuffle read/write MB, spill MB, peak
+  * execution MB, wall and driver s) for the same rep as its time and jobs.
+  *
+  * Args: optional query names. With names, only those queries run (same
+  * warm-up, reps, canary and JSON) — the way to profile one query:
+  * `runMain graft.Bench q204_kcore`. Unknown names are rejected before any
+  * session is built.
   */
 object Bench {
-  private val GroupKey = "spark.jobGroup.id"
+  /** The queries to run: all declared ones, or the named subset. */
+  def selectQueries(args: Seq[String]): Seq[String] = {
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")} — usage: Bench [query...]" +
+        " (the data dir comes from SPARK_GRAFT_SF_DIR)")
+    if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.distinct
+  }
 
   def main(args: Array[String]): Unit = {
+    val names = selectQueries(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
@@ -41,15 +58,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // jobs-per-group counter; group ids are "<query>#<rep>" so attribution
-    // is exact even though listener events are delivered asynchronously
-    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties).map(_.getProperty(GroupKey)).orNull
-        if (g != null) { jobsByGroup.merge(g, 1, (a, b) => a + b); () }
-      }
-    })
+    // per-group layers; group ids are "<query>#<rep>" so attribution is
+    // exact even though listener events are delivered asynchronously
+    val metrics = graft.core.JobMetrics.install(spark.sparkContext)
 
     // untimed warmup: JVM/codegen/parquet-footer costs don't land on the
     // alphabetically-first query. The whole warm phase is WALL-CLOCKED and
@@ -57,9 +68,12 @@ object Bench {
     // builds real standing artifacts, so its cost must be visible in the
     // output JSON rather than silently excluded from the headline total).
     val warmT0 = System.nanoTime()
-    try SparkEntry.queries.headOption.foreach(_._2(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
-    catch { case _: Throwable => }
+    SparkEntry.queries.headOption.foreach { case (name, q) =>
+      try q(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up query $name failed: ${e.getMessage}")
+      }
+    }
     // untimed standing-artifact warm (ADVICE r14): the shared serve
     // artifacts memoize per-process, so without this the FIRST serve query
     // paid the full build inside its timer and per-query numbers were
@@ -105,22 +119,20 @@ object Bench {
     probes += ((tick, canary()))
     val canaryStart = probes.head._2
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
     // samples(name) = per-rep (sec, ok, tick at execution)
     val samples = scala.collection.mutable.Map[String, Vector[(Double, Boolean, Int)]]()
       .withDefaultValue(Vector.empty)
     for (rep <- 1 to reps; name <- names) {
-      spark.sparkContext.setJobGroup(s"$name#$rep", s"bench $name rep $rep")
       val t0 = System.nanoTime()
-      val ok =
+      val ok = metrics.group(s"$name#$rep") {
         try { SparkEntry.queries(name)(spark, sfDir)
                 .write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name rep $rep failed: ${e.getMessage}")
           false
         }
+      }
       val sec = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.clearJobGroup()
       spark.catalog.clearCache() // no cross-query cache reuse in timings
       samples(name) = samples(name) :+ ((sec, ok, tick))
       tick += 1
@@ -130,7 +142,7 @@ object Bench {
     val canaryEnd = probes.last._2
     def nearestProbe(t: Int): Double =
       probes.minBy(p => math.abs(p._1 - t))._2
-    Thread.sleep(500) // let the async listener bus drain before reading counts
+    metrics.drain()
 
     // A query is ok if ANY rep succeeded (transient failures don't zero a
     // real operator); its time is the min over successful reps. A query
@@ -139,25 +151,28 @@ object Bench {
     // normSec = min over ok reps of raw · (0.25 / nearest-probe canary):
     // each rep is corrected by the host state IT ran under, so a rep that
     // landed in a contention trough doesn't poison the query's number.
-    final case class R(name: String, sec: Double, normSec: Double, jobs: Int, ok: Boolean)
+    // A failed query reports 0 jobs (as always) and the layers of its last
+    // rep, so the failure's work stays visible.
+    final case class R(name: String, sec: Double, normSec: Double,
+        layers: graft.core.Layers, ok: Boolean)
     val results = names.map { name =>
       val ss = samples(name)
       val okReps = ss.zipWithIndex.collect { case ((s, true, t), i) => (s, t, i + 1) }
-      if (okReps.isEmpty) R(name, -1, -1, 0, ok = false)
+      if (okReps.isEmpty) R(name, -1, -1, metrics.layers(s"$name#$reps"), ok = false)
       else {
         val (sec, _, rep) = okReps.minBy(_._1)
         val normSec = okReps.map { case (s, t, _) =>
           val c = nearestProbe(t); if (c > 0) s * 0.25 / c else s }.min
-        R(name, sec, normSec, Option(jobsByGroup.get(s"$name#$rep")).fold(0)(_.intValue), ok = true)
+        R(name, sec, normSec, metrics.layers(s"$name#$rep"), ok = true)
       }
     }
-    val failed = results.collect { case R(k, _, _, _, false) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.collect { case R(_, v, _, _, true) => v }.sum
+    val failed = results.filterNot(_.ok).map("\"" + _.name + "\"").mkString("[", ",", "]")
+    val total = results.filter(_.ok).map(_.sec).sum
     def f3(d: Double) = if (d < 0) "-1" else f"$d%.3f"
     val qs = results.map(r => "\"" + r.name + "\":" + f3(r.sec)).mkString("{", ",", "}")
     val qn = results.map(r => "\"" + r.name + "\":" + f3(r.normSec)).mkString("{", ",", "}")
-    val js = results.map(r => "\"" + r.name + "\":" + r.jobs).mkString("{", ",", "}")
+    val js = results.map(r => "\"" + r.name + "\":" + (if (r.ok) r.layers.jobs else 0)).mkString("{", ",", "}")
+    val ls = results.map(r => "\"" + r.name + "\":" + r.layers.json).mkString("{", ",", "}")
     val wa = warmArtifacts.map { case (n, v) => "\"" + n + "\":" + f3(v) }.mkString("{", ",", "}")
     val series = probes.map { case (t, v) => s"[$t,${f3(v)}]" }.mkString("[", ",", "]")
     // cpus + warm_sec ride in BOTH lines (VERDICT r16 item 2): cpus proves
@@ -165,7 +180,7 @@ object Bench {
     // the untimed standing-artifact warm phase's real cost visible, and
     // warm_artifacts splits it per artifact (-1: that build failed).
     val summary = s"""{"total":${f3(total)},"n":${results.size},"failed":$failed,"cpus":$cpus,"warm_sec":${f3(warmSec)},"warm_artifacts":$wa,"canary_start":${f3(canaryStart)},"canary_end":${f3(canaryEnd)}}"""
-    val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"queries_normalized":$qn,"jobs":$js,"failed":$failed,"reps":$reps,"cpus":$cpus,"warm_sec":${f3(warmSec)},"warm_artifacts":$wa,"canary_start":${f3(canaryStart)},"canary_end":${f3(canaryEnd)},"canary_series":$series,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"queries_normalized":$qn,"jobs":$js,"layers":$ls,"failed":$failed,"reps":$reps,"cpus":$cpus,"warm_sec":${f3(warmSec)},"warm_artifacts":$wa,"canary_start":${f3(canaryStart)},"canary_end":${f3(canaryEnd)},"canary_series":$series,"sf":"$sfDir"}"""
     // Belt and braces for the driver's parser: summary first (short — a
     // truncated capture still parses), then the full JSON as the last
     // stdout line (sbt epilogue suppressed via showSuccess := false in

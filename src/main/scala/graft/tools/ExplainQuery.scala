@@ -12,8 +12,9 @@ object ExplainQuery {
       s"first arg must be an sf data dir, got '$sfDir'")
     val names = args.drop(1)
     require(names.nonEmpty, "usage: ExplainQuery <sfDir> <query> [query...]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.core.EngineConf.configure(
-        SparkSession.builder().master("local[4]"), 4)
+        SparkSession.builder().master(s"local[$cpus]"), cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (n <- names) {

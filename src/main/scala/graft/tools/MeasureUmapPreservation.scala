@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
 object MeasureUmapPreservation {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val spark = graft.core.EngineConf.configure(
-        SparkSession.builder().master("local[8]"), 8)
+        SparkSession.builder().master(s"local[$cpus]"), cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = graft.core.Tables.embeddings(spark, sfDir)

@@ -19,8 +19,9 @@ object ScaleSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val opFilter = args.drop(2).headOption.getOrElse("")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.core.EngineConf.configure(
-        SparkSession.builder().master("local[32]"), 32)
+        SparkSession.builder().master(s"local[$cpus]"), cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -545,8 +546,8 @@ object ScaleSmoke {
         pts.write.mode("overwrite").parquet(flatPath)
         val (xLo, xHi) = (maxX * 20 / 100, maxX * 40 / 100)
         val (yLo, yHi) = (maxY * 30 / 100, maxY * 55 / 100)
-        // wall at local[32] is page-cache-fast; the layout's claim is
-        // about BYTES a box scan must touch. TaskMetrics' bytesRead
+        // wall on a many-core local run is page-cache-fast; the layout's
+        // claim is about BYTES a box scan must touch. TaskMetrics' bytesRead
         // under-reports the vectorized local-fs reader (measured 0.3 MB
         // for a 476 MB scan), so pin the FILE-LEVEL truth straight from
         // the filesystem: the covering directories' size is exactly what
@@ -608,46 +609,18 @@ object ScaleSmoke {
               .as("payload"))
           .write.mode("overwrite").parquet(probePath)
         val probe = spark.read.parquet(probePath)
-        // local[32] shuffles at memory speed, so WALL under-sells the
-        // claim; the contested resource at 100 TB is exchange BYTES —
-        // measure them directly with a task-metrics listener
-        val shufW = new java.util.concurrent.atomic.AtomicLong(0L)
-        val lst = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null)
-              shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-          }
-        }
-        spark.sparkContext.addSparkListener(lst)
+        // a many-core local run shuffles at memory speed, so WALL under-
+        // sells the claim; the contested resource at 100 TB is exchange
+        // BYTES — read them from the op's job group (core.JobMetrics)
+        val metrics = graft.core.JobMetrics.install(spark.sparkContext)
         def timedBytes(name: String)(df: => DataFrame): Unit = {
           if (!name.contains(opFilter)) return // mirror time()'s gate —
           // otherwise a filtered-out op would still print a fabricated
           // 0.0-MB byte row
-          shufW.set(0L)
-          time(name, k)(df)
-          // drain the listener bus BEFORE reading the counter: a fixed
-          // sleep can under-count late task-end events. waitUntilEmpty is
-          // private[spark], so go through reflection with the old sleep
-          // as the fallback (bench telemetry only, not correctness).
-          try {
-            val bus = spark.sparkContext.getClass
-              .getMethod("listenerBus").invoke(spark.sparkContext)
-            val wu = bus.getClass.getMethods
-              .filter(_.getName == "waitUntilEmpty")
-              .minBy(_.getParameterCount) // throws on empty — caught below
-            if (wu.getParameterCount == 0) wu.invoke(bus)
-            else wu.invoke(bus, java.lang.Long.valueOf(10000L))
-            ()
-          } catch {
-            // NonFatal, not just ReflectiveOperationException: an empty
-            // method list (API drift) surfaces as UnsupportedOperation-
-            // Exception from minBy — any failure here must fall back to
-            // the sleep, never crash the smoke
-            case scala.util.control.NonFatal(_) => Thread.sleep(300)
-          }
-          println(f"""{"op":"${name}_shuffle_mb","scale":$k,"rows_in":${n0 * k},"sec":${shufW.get / 1048576.0}%.1f}""")
+          val group = s"$name#$k"
+          metrics.group(group)(time(name, k)(df))
+          metrics.drain()
+          println(f"""{"op":"${name}_shuffle_mb","scale":$k,"rows_in":${n0 * k},"mb":${metrics.layers(group).shuffleWriteMb}%.1f}""")
         }
         timedBytes("bloom_prefiltered_semi")(
           BloomPrefilter.mightContainFilter(probe, "k", bitsXx, 1 << 22, 4,
@@ -660,7 +633,7 @@ object ScaleSmoke {
             .join(build.hint("shuffle_hash"), Seq("k"), "left_semi"))
         timedBytes("bloom_plain_semi")(
           probe.join(build.hint("shuffle_hash"), Seq("k"), "left_semi"))
-        spark.sparkContext.removeSparkListener(lst)
+        spark.sparkContext.removeSparkListener(metrics)
         build.unpersist()
       }
       time("priority_sample", k)(
