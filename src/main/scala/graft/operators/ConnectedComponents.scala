@@ -37,10 +37,13 @@ object ConnectedComponents {
     */
   def components(edges: DataFrame, maxIter: Int = 50,
       localThreshold: Long = 1L << 20): DataFrame = {
-    val spark = edges.sparkSession
     val e2 = edges.select(col("src"), col("dst")).cache()
-    if (e2.count() <= localThreshold) return localComponents(e2)
-    starContraction(e2, maxIter)
+    // both paths return a plan that no longer reads e2: the local one is
+    // driver data, the distributed one starts from eager checkpoints
+    try {
+      if (e2.count() <= localThreshold) localComponents(e2)
+      else starContraction(e2, maxIter)
+    } finally e2.unpersist()
   }
 
   /** Alternating large-star / small-star contraction (Kiveris et al.,

@@ -51,15 +51,18 @@ object IncrementalDriver {
         xxhash64(col("user_id")).as("user_id"),
         col("time").as("ts"), col("title"))
       .cache()
-    val userMap = activity.select(col("user_id"), col("user_dir")).distinct()
-    val out = RecentPath.run(activity.select(col("user_id"), col("ts"), col("title")),
-      llm, embedder)
-    val sessions = out.merged
-      .join(broadcast(userMap), "user_id")
-      .drop("user_id")
-      .withColumnRenamed("user_dir", "user_id")
-    new VectorStore(spark, storePath).upsertUsers(sessions)
-    activity.unpersist()
+    try {
+      val userMap = activity.select(col("user_id"), col("user_dir")).distinct()
+      val out = RecentPath.run(activity.select(col("user_id"), col("ts"), col("title")),
+        llm, embedder)
+      try {
+        val sessions = out.merged
+          .join(broadcast(userMap), "user_id")
+          .drop("user_id")
+          .withColumnRenamed("user_dir", "user_id")
+        new VectorStore(spark, storePath).upsertUsers(sessions)
+      } finally Seq(out.sessions, out.thresholds).foreach(_.unpersist())
+    } finally activity.unpersist()
   }
 
   /** User removal: drop the partitions (GDPR delete). */

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.RecencySplit
@@ -35,6 +35,15 @@ object TakeoutIngest {
     StructField("time", TimestampType),
     StructField("products", ArrayType(StringType))))
 
+  /** `user_id` of a row read from `<root>/<user_id>/MyActivity.json`: the
+    * name of the file's directory. `input_file_name()` is a URI (`a b`
+    * arrives as `a%20b`), so it is decoded with URI path semantics; form
+    * decoding (`url_decode`) would also turn `+` into a space. */
+  def userIdFromPath: Column = parentDirName(input_file_name())
+
+  private val parentDirName = udf((uri: String) =>
+    new org.apache.hadoop.fs.Path(new java.net.URI(uri)).getParent.getName)
+
   /** Parse + derive (timestamp/date/hour/month — `month` is a full date
     * string, reproducing the reference's naming quirk, assets/takeout.py:67). */
   def parse(spark: SparkSession, root: String): DataFrame = {
@@ -42,8 +51,7 @@ object TakeoutIngest {
       .schema(takeoutSchema)
       .option("multiLine", "true")
       .json(s"$root/*/MyActivity.json")
-      .withColumn("user_id",
-        regexp_extract(input_file_name(), "([^/]+)/MyActivity\\.json", 1))
+      .withColumn("user_id", userIdFromPath)
       .withColumn("timestamp", col("time"))
       .drop("time")
       .withColumn("date", to_date(col("timestamp")))

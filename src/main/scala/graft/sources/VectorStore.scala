@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.types.StructType
 import graft.similarity.Knn
 
 /** Parquet-backed vector store — the engine's replacement for the
@@ -19,29 +21,47 @@ import graft.similarity.Knn
   *  - `ann` = the pgvector `<=>` query surface: top-k cosine over the
   *    store, served by the engine's ANN operators.
   *
-  * Scale: one directory per user partition; readers prune to the users
-  * they touch (partition pruning replaces the reference's manual
-  * `a.user_id = '<pk>'` pinning); blob-free rows keep partitions small.
+  * Scale: one directory per user partition, `user_id=<escaped id>`.
+  * `load()` lists every partition (a parallel-listing job past Spark's
+  * 32-path threshold) and infers the schema (a job); `loadUser` lists
+  * only the user's own directory (the reference's `a.user_id = '<pk>'`
+  * pinning) under the instance's schema, so a lookup is one job whatever
+  * the number of users. Blob-free rows keep partitions small.
   */
 final class VectorStore(spark: SparkSession, path: String) {
+
+  private val base = new Path(path)
+
+  // The store's schema, resolved by one full `load()` and kept until this
+  // instance writes. Another instance's write that changes the schema is
+  // not seen (the file list is, on every lookup) — as [[IvfIndex]]'s handle.
+  @volatile private var schemaCache: Option[StructType] = None
+
+  private def schema: StructType = schemaCache.getOrElse {
+    val s = load().schema
+    schemaCache = Some(s)
+    s
+  }
+
+  private def fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The user's partition directory, escaped exactly as Spark's writer
+    * escapes it (`a:b` → `user_id=a%3Ab`). */
+  private def userDir(userId: String): Path =
+    new Path(base, ExternalCatalogUtils.getPartitionPathString("user_id", userId))
 
   /** Overwrite exactly the user partitions present in `df` (must carry a
     * `user_id` column). */
   def upsertUsers(df: DataFrame): Unit =
-    df.write.mode("overwrite").partitionBy("user_id")
+    try df.write.mode("overwrite").partitionBy("user_id")
       .option("partitionOverwriteMode", "dynamic") // write-scoped, no session leak
       .parquet(path)
+    finally schemaCache = None
 
   /** Remove user partitions (partition-level delete). */
-  def deleteUsers(userIds: Seq[String]): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(hconf)
-    userIds.foreach { u =>
-      val p = new org.apache.hadoop.fs.Path(base, s"user_id=$u")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-  }
+  def deleteUsers(userIds: Seq[String]): Unit =
+    try userIds.map(userDir).foreach(p => if (fs.exists(p)) fs.delete(p, true))
+    finally schemaCache = None
 
   def load(): DataFrame = spark.read.parquet(path)
 
@@ -53,9 +73,18 @@ final class VectorStore(spark: SparkSession, path: String) {
       nCentroids: Int, iters: Int = 3, seed: Long = 42L): IvfIndex =
     IvfIndex.build(load(), indexPath, idCol, vecCol, nCentroids, iters, seed)
 
-  /** Rows of one user — relies on partition pruning, not a full scan. */
-  def loadUser(userId: String): DataFrame =
-    load().filter(col("user_id") === userId)
+  /** Rows of one user, equal to `load().filter(col("user_id") === userId)`:
+    * reads only the user's directory, listed fresh on every call (so
+    * another instance's writes show), with `basePath` keeping `user_id` a
+    * column. A user with no directory (and "", which Spark stores as null)
+    * gets an empty frame with the store's schema. */
+  def loadUser(userId: String): DataFrame = {
+    val s = schema
+    val dir = userDir(userId)
+    if (userId != null && userId.nonEmpty && fs.exists(dir))
+      spark.read.schema(s).option("basePath", path).parquet(dir.toString)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+  }
 
   /** Top-k cosine neighbors in the store for each query row. */
   def ann(queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame =

@@ -188,8 +188,7 @@ object StreamOps {
       .option("maxFilesPerTrigger", "1000")
       .option("multiLine", "true") // MyActivity.json is one pretty-printed array
       .json(s"$root/*/MyActivity.json")
-      .withColumn("user_id",
-        regexp_extract(input_file_name(), "([^/]+)/MyActivity\\.json", 1))
+      .withColumn("user_id", graft.pipeline.TakeoutIngest.userIdFromPath)
 
   /** Run a streaming frame into an idempotent per-user-partition parquet
     * sink: each micro-batch dynamically overwrites only the user partitions
@@ -200,11 +199,10 @@ object StreamOps {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         batch.write
           .mode("overwrite")
           .partitionBy("user_id")
+          .option("partitionOverwriteMode", "dynamic") // write-scoped, no session leak
           .parquet(outPath)
       }
       .start()

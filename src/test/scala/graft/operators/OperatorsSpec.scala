@@ -473,4 +473,26 @@ class TakeoutIngestSpec extends SparkSpec {
       .collect().sorted.toSeq
     assert(rec == Seq("alice", "bob"))
   }
+
+  test("user_id is the directory name, for batch ingest and stream discovery") {
+    import graft.streaming.StreamOps
+    val root = java.nio.file.Files.createTempDirectory("takeout-names").toString
+    // `a b` and `x%y` are percent-encoded in input_file_name()'s URI; `a+b`
+    // is not, and form decoding would turn its `+` into a space
+    val users = Seq("a b", "a+b", "x%y", "plain")
+    users.foreach { u =>
+      val dir = java.nio.file.Paths.get(root, u)
+      java.nio.file.Files.createDirectories(dir)
+      java.nio.file.Files.writeString(dir.resolve("MyActivity.json"),
+        """[{"header": "Search", "title": "t", "time": "2024-01-01T10:00:00.000Z"}]""")
+    }
+    def ids(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("user_id").collect().map(_.getString(0)).toSet
+    assert(ids(TakeoutIngest.parse(spark, root)) == users.toSet)
+    val q = StreamOps.discoverUsers(spark, root, TakeoutIngest.takeoutSchema)
+      .writeStream.format("memory").queryName("takeout_names")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    assert(ids(spark.table("takeout_names")) == users.toSet)
+  }
 }

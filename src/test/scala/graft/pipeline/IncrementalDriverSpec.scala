@@ -1,8 +1,14 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.enrich.{StubEmbedder, StubSessionsLLM}
+import graft.enrich.{LLMClient, StubEmbedder, StubSessionsLLM}
 import org.apache.spark.sql.functions._
+
+/** An LLM endpoint that is down. */
+final class FailingLLM extends LLMClient {
+  override def complete(prompts: Seq[String]): Seq[String] =
+    throw new IllegalStateException("LLM unavailable")
+}
 
 class IncrementalDriverSpec extends SparkSpec {
 
@@ -27,7 +33,10 @@ class IncrementalDriverSpec extends SparkSpec {
     def tick(): Unit = IncrementalDriver.tick(spark, root, store, ckpt,
       new StubSessionsLLM, new StubEmbedder)
 
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
     tick()
+    // nothing a micro-batch cached outlives it
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds)
     val after1 = spark.read.parquet(store)
     assert(after1.select("user_id").distinct().count() == 2)
     val aliceRows1 = after1.filter(col("user_id") === "alice").collect().map(_.toString).sorted
@@ -52,5 +61,20 @@ class IncrementalDriverSpec extends SparkSpec {
     val after4 = spark.read.parquet(store)
     assert(after4.select("user_id").distinct().collect().map(_.getString(0)).sorted
       .toSeq == Seq("alice", "carol"))
+  }
+
+  test("a failing micro-batch leaves nothing cached") {
+    val root = java.nio.file.Files.createTempDirectory("inc-fail-root").toString
+    val store = java.nio.file.Files.createTempDirectory("inc-fail-store").toString + "/sessions"
+    val ckpt = java.nio.file.Files.createTempDirectory("inc-fail-ckpt").toString
+    writeUser(root, "alice", Seq("2024-01-01T10:00:00.000Z", "2024-01-01T10:05:00.000Z"))
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception] {
+      IncrementalDriver.tick(spark, root, store, ckpt, new FailingLLM, new StubEmbedder)
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(e).exists(_.contains("LLM unavailable")), e)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds)
   }
 }

@@ -37,6 +37,73 @@ class VectorStoreSpec extends SparkSpec {
     assert(store.loadUser("u1").count() == 1)
   }
 
+  // Ids Spark escapes in partition paths (`a:b` → `user_id=a%3Ab`), two it
+  // leaves as is (`a b`, and `q}r` with a glob character), and 35 plain
+  // ones: 40 users, past Spark's 32-path parallel-listing threshold.
+  private val oddIds = Seq("a:b", "c=d", "x%y", "a b", "q}r")
+  private val users40 = oddIds ++ (0 until 35).map(i => f"u$i%02d")
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private def store40(name: String): (String, VectorStore) = {
+    val path = java.nio.file.Files.createTempDirectory(name).toString + "/store"
+    val store = new VectorStore(spark, path)
+    store.upsertUsers(mk(users40.zipWithIndex.flatMap { case (u, i) =>
+      Seq((u, i.toLong, Seq(i.toFloat, 1f)), (u, 100L + i, Seq(1f, i.toFloat)))
+    }: _*))
+    (path, store)
+  }
+
+  test("a warm loadUser runs one job: no store-wide listing, no schema inference") {
+    val (_, store) = store40("vstore7")
+    store.loadUser("u01").collect()
+    val sc = spark.sparkContext
+    val m = graft.core.JobMetrics.install(sc)
+    try {
+      val rows = m.group("lookup") { store.loadUser("u07").collect() }
+      m.drain()
+      assert(rows.length == 2)
+      assert(m.layers("lookup").jobs == 1L, m.layers("lookup"))
+    } finally sc.removeSparkListener(m)
+  }
+
+  test("loadUser equals load().filter for every user, escaped ids included") {
+    val (_, store) = store40("vstore8")
+    val all = store.load()
+    for (u <- users40) {
+      val one = store.loadUser(u)
+      assert(one.schema == all.schema, u)
+      val expected = rowsOf(all.filter(col("user_id") === u))
+      assert(expected.length == 2, u)
+      assert(rowsOf(one) == expected, u)
+    }
+    // no directory: an empty frame with the store's schema, not an exception
+    for (u <- Seq("nobody", "")) {
+      val none = store.loadUser(u)
+      assert(none.schema == all.schema && none.collect().isEmpty, u)
+    }
+  }
+
+  test("a warm instance's loadUser sees another instance's upserts") {
+    val (path, store) = store40("vstore9")
+    assert(rowsOf(store.loadUser("u03")).length == 2)
+    assert(store.loadUser("new user").collect().isEmpty)
+    new VectorStore(spark, path).upsertUsers(mk(
+      ("u03", 7L, Seq(0.5f, 0.5f)), ("new user", 8L, Seq(0.25f, 0.75f))))
+    assert(store.loadUser("u03").select("id").as[Long].collect().toSeq == Seq(7L))
+    assert(store.loadUser("new user").select("user_id", "id").as[(String, Long)]
+      .collect().toSeq == Seq(("new user", 8L)))
+  }
+
+  test("deleteUsers removes the partitions of ids Spark escapes") {
+    val (_, store) = store40("vstore10")
+    store.deleteUsers(oddIds :+ "never stored")
+    val left = store.load().select("user_id").distinct().as[String].collect().toSet
+    assert(left == users40.drop(oddIds.size).toSet)
+    assert(store.loadUser("a:b").collect().isEmpty)
+  }
+
   test("mergeUpsert: updates replace by key, inserts append, others kept") {
     val existing = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     val changes = Seq((2L, "B"), (9L, "Z")).toDF("id", "v")

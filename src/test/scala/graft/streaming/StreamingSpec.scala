@@ -124,6 +124,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file discovery + idempotent user-partitioned sink") {
+    // the sink's dynamic overwrite is write-scoped: the session keeps its mode
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(mode)
+    val sessionMode = spark.conf.get(mode)
     val root = java.nio.file.Files.createTempDirectory("disc").toString
     def write(user: String, time: String): Unit = {
       val dir = java.nio.file.Paths.get(root, user)
@@ -138,6 +142,7 @@ class StreamingSpec extends SparkSpec {
     val disc = StreamOps.discoverUsers(spark, root,
       graft.pipeline.TakeoutIngest.takeoutSchema)
     StreamOps.toUserPartitionedSink(disc, out, ckpt).awaitTermination()
+    assert(spark.conf.get(mode) == sessionMode)
     val got = spark.read.parquet(out)
     assert(got.select("user_id").distinct().count() == 2)
     // second tick with a new user: only new files processed, sink stays consistent
