@@ -24,6 +24,12 @@ final case class Layers(jobs: Long, stages: Long, tasks: Long, cpuS: Double,
 /** The one Spark listener: attributes jobs, stages, tasks and task metrics
   * to the job group that was active when each job started.
   *
+  * [[group]] also sets an engine-owned local property, and a job carrying
+  * it is attributed by it first. A streaming query's thread inherits the
+  * local properties of the thread that started it but runs its
+  * micro-batches under a job group equal to the query's run id, so the
+  * property is what lands those jobs in the group that started the query.
+  *
   * A stage belongs to the group of the job that submitted it (mapped at
   * `onJobStart`), so task metrics land in the right group even though the
   * listener bus delivers events asynchronously. CPU is `executorCpuTime`;
@@ -46,7 +52,8 @@ final class JobMetrics private (sc: SparkContext) extends SparkListener {
   private def of(g: String): Counters = counters.getOrElseUpdate(g, new Counters)
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    Option(e.properties).flatMap(p => Option(p.getProperty(JobMetrics.GroupKey))).foreach { g =>
+    Option(e.properties).flatMap(p => Option(p.getProperty(JobMetrics.OwnerKey))
+        .orElse(Option(p.getProperty(JobMetrics.GroupKey)))).foreach { g =>
       jobGroup(e.jobId) = (g, e.time)
       e.stageIds.foreach(stageGroup(_) = g)
       of(g).jobs += 1
@@ -75,17 +82,21 @@ final class JobMetrics private (sc: SparkContext) extends SparkListener {
   }
 
   /** Run `body` under job group `id` and record its wall window. The
-    * caller's group, if any, is restored afterwards. */
+    * caller's group, if any, is restored afterwards. Streaming queries
+    * started in `body` count toward `id` for as long as they run. */
   def group[T](id: String)(body: => T): T = {
     val prev = sc.getLocalProperty(JobMetrics.GroupKey)
     val prevDesc = sc.getLocalProperty(JobMetrics.DescKey)
+    val prevOwner = sc.getLocalProperty(JobMetrics.OwnerKey)
     sc.setJobGroup(id, id)
+    sc.setLocalProperty(JobMetrics.OwnerKey, id)
     val t0 = System.currentTimeMillis()
     try body
     finally {
       val t1 = System.currentTimeMillis()
       synchronized { of(id).window = (t0, t1) }
       if (prev == null) sc.clearJobGroup() else sc.setJobGroup(prev, prevDesc)
+      sc.setLocalProperty(JobMetrics.OwnerKey, prevOwner)
     }
   }
 
@@ -119,6 +130,7 @@ final class JobMetrics private (sc: SparkContext) extends SparkListener {
 
 object JobMetrics {
   val GroupKey = "spark.jobGroup.id"
+  private val OwnerKey = "graft.metrics.group"
   private val DescKey = "spark.job.description"
 
   def install(sc: SparkContext): JobMetrics = {

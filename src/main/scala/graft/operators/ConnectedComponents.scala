@@ -3,20 +3,16 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed connected components by min-label propagation with pointer
-  * jumping (SURVEY §2.4 op 24: the set-based replacement for the reference's
-  * sequential UPDATE/DELETE merge loop, assets/recent_history.py:413-447).
+/** Connected components (SURVEY §2.4 op 24: the set-based replacement for
+  * the reference's sequential UPDATE/DELETE merge loop,
+  * assets/recent_history.py:413-447): driver-side union-find for small
+  * graphs, large-star / small-star contraction otherwise.
   *
   * Semantics contract (SURVEY §2.4): merged sessions = connected components
   * of the *initial* candidate-pair graph — exactly what the reference's loop
   * computes, because its pair list is materialized once, before any merge.
   *
-  * Each iteration combines
-  *  1. neighbor-min propagation (label ← min over adjacent labels), and
-  *  2. pointer jumping (label ← label's label),
-  * giving O(log n) convergence on chains instead of O(diameter).
-  * Convergence is detected by the (monotonically decreasing) sum of labels.
-  * Lineage is truncated every iteration via `localCheckpoint` — without it
+  * Lineage is truncated every round via `localCheckpoint` — without it
   * the loop re-executes the whole upstream plan each pass and the lineage
   * grows unboundedly (a classic iterative-Spark failure at scale).
   */
@@ -119,45 +115,6 @@ object ConnectedComponents {
       .join(e.groupBy(col("u")).agg(min(col("v")).as("lbl"))
         .withColumnRenamed("u", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("component"))
-  }
-
-  /** Min-label propagation + pointer jumping (kept for reference and for
-    * tests comparing the two distributed formulations). */
-  def componentsLabelPropagation(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val e2 = edges.select(col("src"), col("dst"))
-    val bidir = e2
-      .union(e2.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-
-    var labels = bidir.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint(true)
-
-    var iter = 0
-    // Convergence = no label changed this pass, detected by an id-equi-join
-    // of new vs previous labels (overflow-proof, unlike a Long label sum
-    // which wraps at scale and reads any zero-summing graph as converged).
-    var converged = labels.isEmpty // empty graph → no iterations
-    while (iter < maxIter && !converged) {
-      val prev = labels
-      val neighborMin = bidir
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("lbl"))
-      val jump = labels.as("x")
-        .join(labels.select(col("id").as("lbl"), col("lbl").as("lbl2")), "lbl")
-        .select(col("id"), col("lbl2").as("lbl"))
-      labels = labels.union(neighborMin).union(jump)
-        .groupBy("id").agg(min("lbl").as("lbl"))
-        .localCheckpoint(true)
-      val changed = labels.as("n")
-        .join(prev.select(col("id"), col("lbl").as("plbl")), "id")
-        .where(col("lbl") =!= col("plbl"))
-        .limit(1).count() // any single changed row proves non-convergence
-      converged = changed == 0L
-      iter += 1
-    }
-    labels.select(col("id"), col("lbl").as("component"))
   }
 
   /** Driver-side union-find for small graphs (min-id roots, identical

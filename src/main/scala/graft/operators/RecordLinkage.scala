@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * Scale shapes: equiBlock is one shuffle on the key. Sorted
   * neighborhood's global rank is the TWO-PASS form (range-repartition →
   * per-partition ranks + broadcast partition-size offsets), never a
-  * single-partition window; the rank-band pairing goes through
-  * [[BandJoin]] (bucketed equi-join, no nested loop). Matching is two
-  * per-entity windows over already-blocked candidates. */
+  * single-partition window; the rank-band pairing is an equi-join of
+  * each left rank's 2w+1 neighbour ranks (no nested loop). Matching is
+  * two per-entity windows over already-blocked candidates. */
 object RecordLinkage {
 
   /** Dense global 1-based rank of `df` by (`orderCol`, tie cols), without
@@ -61,18 +61,21 @@ object RecordLinkage {
 
   /** Pass B — sorted neighborhood: global rank over the UNION of both
     * registries ordered by (name, side, id); candidates = cross-side
-    * pairs within `w` ranks. */
+    * pairs within `w` ranks. The ranks are dense and unique, so joining
+    * `explode(sequence(lrnk − w, lrnk + w))` to `rrnk` is exact. */
   def sortedNeighborhood(left: DataFrame, right: DataFrame, w: Int): DataFrame = {
+    require(w >= 0, s"negative neighborhood width $w")
     val tagged = left.select(col("lid").as("id"), col("l_name").as("name"),
         lit(0).as("side"))
       .unionAll(right.select(col("rid").as("id"), col("r_name").as("name"),
         lit(1).as("side")))
     val ranked = withGlobalRank(tagged, Seq("name", "side", "id"), "rnk")
     val l = ranked.filter(col("side") === 0)
-      .select(col("id").as("lid"), col("name").as("l_name"), col("rnk").as("lrnk"))
+      .select(col("id").as("lid"), col("name").as("l_name"),
+        explode(sequence(col("rnk") - w, col("rnk") + w)).as("rrnk"))
     val r = ranked.filter(col("side") === 1)
       .select(col("id").as("rid"), col("name").as("r_name"), col("rnk").as("rrnk"))
-    BandJoin.bandJoin(l, r, Seq.empty, col("lrnk"), col("rrnk"), -w, w)
+    l.join(r, "rrnk")
       .select(col("lid"), col("l_name"), col("rid"), col("r_name"))
   }
 

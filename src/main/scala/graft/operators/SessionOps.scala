@@ -64,7 +64,11 @@ object SessionOps {
 
   /** Merge-candidate pairs (assets/recent_history.py:384-411): b temporally
     * at/after a, gap ≤ per-user time threshold, cosine ≥ per-user similarity
-    * threshold. Banded equi-join, not a nested loop (see BandJoin).
+    * threshold. A plain inner join on `user_id` whose condition carries the
+    * band `b_start_ts − a_end_ts ∈ [−86400, maxGapS]` and the residual: on
+    * an engine session `plans.BandJoinRewrite` buckets it by band width when
+    * neither side is broadcast-small, and otherwise the hash join on
+    * `user_id` serves it.
     *
     * `maxGapS` bounds the band width; the reference's theta predicate admits
     * gaps down to −86400s (cross-midnight ordering quirk), reproduced here.
@@ -91,11 +95,9 @@ object SessionOps {
       col("embedding").as("b_emb"))
     val ordering = (col("b_date") > col("a_date")) ||
       (col("b_date") === col("a_date") && col("b_start_s") >= col("a_end_s"))
-    val pairs = BandJoin.bandJoin(
-      a, b, Seq("user_id"),
-      leftVal = col("a_end_ts"), rightVal = col("b_start_ts"),
-      lo = -86400L, hi = maxGapS,
-      residual = col("a_id") =!= col("b_id") && ordering)
+    val gap = col("b_start_ts") - col("a_end_ts")
+    val pairs = a.join(b, Seq("user_id"))
+      .where(gap >= -86400L && gap <= maxGapS && col("a_id") =!= col("b_id") && ordering)
     def i9(c: Column): Column = graft.functions.fixed_point(c, 1e9)
     pairs
       .join(broadcast(thresholds), "user_id")

@@ -6,8 +6,9 @@ import graft.enrich.{Embedder, LLMClient}
 import graft.operators.{Sessionize, SessionOps}
 
 /** The reference's recent path end-to-end (SURVEY §3 EP2): activity →
-  * LLM sessions → embeddings → adaptive thresholds → banded candidate
-  * pairs → connected-components merge → top-1 similarity graph.
+  * LLM sessions → embeddings → adaptive thresholds → candidate pairs (a
+  * band join on `user_id` that `plans.BandJoinRewrite` buckets) →
+  * connected-components merge → top-1 similarity graph.
   *
   * Every stage is a DataFrame transformation; enrichment stages cache
   * their output (non-deterministic boundary — Catalyst must not re-execute

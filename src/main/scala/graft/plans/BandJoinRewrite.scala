@@ -28,7 +28,10 @@ import org.apache.spark.sql.types._
   *
   * It also fires when equi-keys exist (e.g. `user_id`): the bucket refines
   * the hash key, splitting a hot key's O(n²) per-key pair space across
-  * band-width time slices — the band-join scale story at 100 TB.
+  * band-width time slices — the band-join scale story at 100 TB. The
+  * recent path's merge candidates (`operators.SessionOps.candidatePairs`)
+  * are stated as such a join and bucketed here; this rule is the engine's
+  * only band bucketing.
   *
   * Bucket arithmetic must be EXACT on the matching side (a residual can
   * remove bucket false positives but can never recover a pair whose
@@ -70,12 +73,11 @@ object BandJoinRewrite extends Rule[LogicalPlan] {
     t > 0 && (j.left.stats.sizeInBytes <= t || j.right.stats.sizeInBytes <= t)
   }
 
-  /** Skip joins already bucketed — by this rule or by the library-level
-    * graft.operators.BandJoin (its residual band predicate would otherwise
-    * trigger a redundant second bucketing). */
+  /** Skip joins this rule already bucketed (the kept band predicate would
+    * otherwise trigger a redundant second bucketing). */
   private def alreadyBucketed(cond: Expression): Boolean =
     cond.exists {
-      case a: Attribute => a.name.startsWith(BucketName) || a.name == "__bucket"
+      case a: Attribute => a.name.startsWith(BucketName)
       case _ => false
     }
 

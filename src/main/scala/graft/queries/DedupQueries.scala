@@ -2055,9 +2055,10 @@ object DedupQueries {
 
   /** Entity resolution / record linkage — `operators.RecordLinkage`:
     * two blocking passes (equi-key on (name-prefix-4, year); sorted
-    * neighborhood ±8 over the two-pass scale-safe global rank +
-    * BandJoin), union-distinct candidates with per-pass provenance
-    * flags, Levenshtein ≤ 2 scoring, reciprocal-best-hit matching. The
+    * neighborhood ±8 over the two-pass scale-safe global rank, paired
+    * by an equi-join on the exploded neighbour ranks), union-distinct
+    * candidates with per-pass provenance flags, Levenshtein ≤ 2
+    * scoring, reciprocal-best-hit matching. The
     * oracle replays the ENTIRE chain — registry construction, both
     * blocking passes (the rank via one window), candidate dedup, the
     * distance, both matching windows — in SQL; `is_correct` audits the

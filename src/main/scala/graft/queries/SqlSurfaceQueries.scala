@@ -77,8 +77,9 @@ object SqlSurfaceQueries {
     * a SQL user would type (`b.ts_s BETWEEN a.ts_s AND a.ts_s + 1800`).
     * With GraftExtensions active (EngineConf registers them on every
     * engine session) the rule rewrites the band into a bucketed equi-join
-    * — `__graft_band_bucket` refining the user_id hash key, the q17
-    * library-operator semantics arrived at from SQL. The run uses a
+    * — `__graft_band_bucket` refining the user_id hash key, the same
+    * rewrite that plans the recent path's merge candidates
+    * (`SessionOps.candidatePairs`). The run uses a
     * CLONED session with auto-broadcast disabled: at verify scale the
     * events scan fits under the broadcast threshold and the rule's
     * stats gate would (correctly) leave the join to broadcast — disabling

@@ -20,10 +20,9 @@ import graft.functions.cosine_similarity
   * bounded-size groups — the per-user contract everywhere else in the
   * engine; an unbounded label would route through the LSH-bucketed
   * variant like `SessionOps.similarityGraph`). Negatives cost k small
-  * equi-joins on a dense row index — no pair blowup. The index here is a
-  * global `row_number` (fine at query scale); at 100 TB the corpus
-  * carries a precomputed dense index column from ingest (zipWithIndex)
-  * and the draw becomes k hash-partitioned lookups, same semantics.
+  * equi-joins on a dense row index — no pair blowup. The index is the
+  * two-pass `RecordLinkage.withGlobalRank` by id (range-repartition plus
+  * partition offsets), never a single-partition window.
   */
 object Contrastive {
 
@@ -52,8 +51,8 @@ object Contrastive {
       .select(col("anchor_id"), lit("pos").as("role"),
         (lit(0L) - col("m.nid")).as("partner_id"), col("m.sim_ppb").as("sim_ppb"))
     // negatives: md5 draws over the dense row index, first k valid attempts
-    val idx = e.withColumn("ridx",
-      row_number().over(Window.orderBy(col("id"))) - 1)
+    val idx = graft.operators.RecordLinkage.withGlobalRank(e, Seq("id"), "ridx")
+      .withColumn("ridx", col("ridx") - 1)
     val total = e.agg(count(lit(1)).as("n"))
     val drawn = e.select(col("label").as("a_label"), col("id").as("anchor_id"),
         col("vec").as("vec_a"))

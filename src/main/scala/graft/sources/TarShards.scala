@@ -35,19 +35,19 @@ object TarShards {
     // interchangeable and members differing only in bytes get a
     // deterministic content-hash order — so packing stays byte-
     // deterministic even on degenerate inputs with repeated names.
-    val w = Window.partitionBy(col("__bucket"))
+    val w = Window.partitionBy(col("__prefix"))
       .orderBy(col("__ord"), col("__content"))
       .rowsBetween(Window.unboundedPreceding, -1)
     blobs
       .select(col(nameCol).as("__name"), col(bytesCol).as("__bytes"),
         md5(concat(lit(s"$salt|"), col(nameCol))).as("__ord"),
         md5(col(bytesCol)).as("__content"))
-      .withColumn("__bucket", substring(col("__ord"), 1, 2))
+      .withColumn("__prefix", substring(col("__ord"), 1, 2))
       .withColumn("__entry",
         expr("512 + ((length(__bytes) + 511) DIV 512) * 512"))
       .withColumn("__start", coalesce(sum(col("__entry")).over(w), lit(0L)))
       .select(
-        concat(col("__bucket"), lit("-"),
+        concat(col("__prefix"), lit("-"),
           expr(s"CAST(__start DIV $targetShardBytes AS STRING)")).as("shard_id"),
         col("__ord"), col("__content").as("__tie"), col("__name"), col("__bytes"))
   }
@@ -103,14 +103,14 @@ object TarShards {
       md5(concat(lit(s"$salt|"), col(sampleCol))).as("__ord"))
       .withColumn("__entry",
         expr("512 + ((length(__bytes) + 511) DIV 512) * 512"))
-    val w = Window.partitionBy(col("__bucket")).orderBy(col("__ord"))
+    val w = Window.partitionBy(col("__prefix")).orderBy(col("__ord"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val samples = base.groupBy(col("__sample"), col("__ord"))
       .agg(sum(col("__entry")).as("__foot"))
-      .withColumn("__bucket", substring(col("__ord"), 1, 2))
+      .withColumn("__prefix", substring(col("__ord"), 1, 2))
       .withColumn("__start", coalesce(sum(col("__foot")).over(w), lit(0L)))
       .select(col("__sample"),
-        concat(col("__bucket"), lit("-"),
+        concat(col("__prefix"), lit("-"),
           expr(s"CAST(__start DIV $targetShardBytes AS STRING)")).as("shard_id"))
     packAssigned(base.join(samples, Seq("__sample"))
       .select(col("shard_id"), col("__ord"), col("__name").as("__tie"),

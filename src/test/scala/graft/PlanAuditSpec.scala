@@ -8,8 +8,9 @@ package graft
   *  2. BroadcastNestedLoopJoin appears only where it is the DELIBERATE
   *     shape (small broadcast probe × corpus in the ANN brute-force, and
   *     Catalyst's scalar-subquery decorrelation) — a band/theta join
-  *     falling back to BNLJ is a bug (that's what BandJoin/BandJoinRewrite
-  *     exist to prevent);
+  *     falling back to BNLJ is a bug (band joins carry an equi-key or go
+  *     through the BandJoinRewrite optimizer rule; rank bands become
+  *     equi-joins on exploded neighbour ranks);
   *  3. filter pushdown reaches the parquet scan where queries select on
   *     scan columns;
   *  4. small dimension joins broadcast.

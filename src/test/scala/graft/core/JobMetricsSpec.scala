@@ -1,6 +1,9 @@
 package graft.core
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.Trigger
 
 /** Work is attributed to the job group it ran under, exactly, once the
   * bus is drained — no sleep, even with both groups' events in flight. */
@@ -36,5 +39,43 @@ class JobMetricsSpec extends SparkSpec {
         assert(l.driverS >= 0.0 && l.driverS <= l.wallS, l)
       }
     } finally sc.removeSparkListener(m)
+  }
+
+  test("a streaming query's jobs land in the group that started it") {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("jobmetrics-stream").toFile
+    val src = new java.io.File(dir, "src")
+    spark.range(0, 50).selectExpr("id", "id % 5 AS k").write.json(src.getPath)
+    val m = JobMetrics.install(sc)
+    m.drain() // the write's events must not reach the counter below
+    val all = new java.util.concurrent.atomic.AtomicLong
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = all.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(counter)
+    try {
+      val q = m.group("s") {
+        val q = spark.readStream.schema("id LONG, k LONG").json(src.getPath)
+          .writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            batch.groupBy("k").count().collect(): Unit
+          }
+          .trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", new java.io.File(dir, "ckpt").getPath)
+          .start()
+        q.awaitTermination()
+        q
+      }
+      m.drain()
+      val s = m.layers("s")
+      assert(s.jobs > 0)
+      assert(s.jobs == all.get)
+      assert(m.layers(q.runId.toString).jobs == 0L)
+      assert(s.driverS >= 0.0 && s.driverS <= s.wallS, s)
+    } finally {
+      sc.removeSparkListener(counter)
+      sc.removeSparkListener(m)
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
   }
 }

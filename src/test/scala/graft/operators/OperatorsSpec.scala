@@ -3,89 +3,6 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class BandJoinSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("band join matches nested-loop semantics") {
-    val left = Seq((1L, 10L), (1L, 50L), (1L, 100L), (2L, 10L))
-      .toDF("k", "lv").select(col("k"), col("lv"), col("lv").as("a_id"))
-    val right = Seq((1L, 12L), (1L, 49L), (1L, 200L), (2L, 11L))
-      .toDF("k", "rv").select(col("k"), col("rv"), col("rv").as("b_id"))
-    val got = BandJoin.bandJoin(left, right, Seq("k"),
-        col("lv"), col("rv"), lo = -5L, hi = 10L)
-      .select("k", "lv", "rv").as[(Long, Long, Long)].collect().toSet
-    val expect = (for {
-      (lk, lv) <- Seq((1L, 10L), (1L, 50L), (1L, 100L), (2L, 10L))
-      (rk, rv) <- Seq((1L, 12L), (1L, 49L), (1L, 200L), (2L, 11L))
-      if lk == rk && rv - lv >= -5 && rv - lv <= 10
-    } yield (lk, lv, rv)).toSet
-    assert(got == expect)
-  }
-
-  test("band join handles negative values and residual predicate") {
-    val left = Seq((1L, -100L, 1L)).toDF("k", "lv", "a_id")
-    val right = Seq((1L, -95L, 2L), (1L, -80L, 3L)).toDF("k", "rv", "b_id")
-    val got = BandJoin.bandJoin(left, right, Seq("k"), col("lv"), col("rv"),
-        lo = 0L, hi = 10L, residual = col("b_id") =!= 2L)
-      .select("rv").as[Long].collect().toSeq
-    assert(got.isEmpty) // -95 excluded by residual; -80 outside band
-  }
-
-  test("band join stays exact for long values beyond 2^53 (decimal buckets)") {
-    // doubles round these values to multiples of 4 — the old double-divide
-    // bucketing could place left and right in different buckets and DROP
-    // genuinely matching pairs
-    val base = (1L << 55) + 1L
-    val left = (0 until 50).map(i => (1L, base + i * 3L)).toDF("k", "lv")
-    val right = (0 until 50).map(i => (1L, base + i * 3L + 1L)).toDF("k", "rv")
-    val got = BandJoin.bandJoin(left, right, Seq("k"),
-        col("lv"), col("rv"), lo = 0L, hi = 4L)
-      .select("lv", "rv").as[(Long, Long)].collect().toSet
-    val expect = (for {
-      i <- 0 until 50; j <- 0 until 50
-      lv = base + i * 3L; rv = base + j * 3L + 1L
-      if rv - lv >= 0 && rv - lv <= 4
-    } yield (lv, rv)).toSet
-    assert(got == expect)
-    assert(expect.size >= 50) // at least the (i, i) and many (i, i+1) pairs
-  }
-
-  test("fractional band join accepts bounds beyond 1e15 (double path)") {
-    // the 1e15 guard protects the decimal casts, which only the integral
-    // path uses — a double-typed band join with huge bounds must still run
-    val left = Seq((1L, 0.0), (1L, 1e15)).toDF("k", "lv")
-    val right = Seq((1L, 5e14), (1L, 3e15)).toDF("k", "rv")
-    val got = BandJoin.bandJoin(left, right, Seq("k"),
-        col("lv"), col("rv"), lo = 0L, hi = 2_000_000_000_000_000L)
-      .select("lv", "rv").as[(Double, Double)].collect().toSet
-    assert(got == Set((0.0, 5e14), (1e15, 3e15)))
-    // integral columns with the same bounds still throw (decimal overflow guard)
-    val li = Seq((1L, 0L)).toDF("k", "lv")
-    val ri = Seq((1L, 1L)).toDF("k", "rv")
-    intercept[IllegalArgumentException] {
-      BandJoin.bandJoin(li, ri, Seq("k"), col("lv"), col("rv"),
-        lo = 0L, hi = 2_000_000_000_000_000L)
-    }
-  }
-
-  test("fractional band join rejects bounds at/beyond 2^53 (double rounding)") {
-    // v + shift in doubles: once ulp(v+shift) exceeds the distance to a
-    // bucket boundary, the bucket drifts and a matching pair is silently
-    // dropped (e.g. v = -0.5, hi = 2^60 → buckets {-1,1}, right row in
-    // bucket 0 lost). The guard turns the silent false negative into an error.
-    val left = Seq((1L, -0.5)).toDF("k", "lv")
-    val right = Seq((1L, 0.25)).toDF("k", "rv")
-    intercept[IllegalArgumentException] {
-      BandJoin.bandJoin(left, right, Seq("k"), col("lv"), col("rv"),
-        lo = 0L, hi = 1L << 53)
-    }
-    intercept[IllegalArgumentException] {
-      BandJoin.bandJoin(left, right, Seq("k"), col("lv"), col("rv"),
-        lo = -(1L << 60), hi = 0L)
-    }
-  }
-}
-
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -121,7 +38,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(local == dist)
   }
 
-  test("star contraction == label propagation == union-find on random graphs") {
+  test("star contraction == union-find on random graphs") {
     for (seed <- Seq(1, 23, 99)) {
       val rnd = new scala.util.Random(seed)
       val edges = (1 to 200).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
@@ -130,10 +47,7 @@ class ConnectedComponentsSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       val star = ConnectedComponents.starContraction(edges)
         .as[(Long, Long)].collect().toMap
-      val lp = ConnectedComponents.componentsLabelPropagation(edges)
-        .as[(Long, Long)].collect().toMap
       assert(star == local, s"star vs union-find diverged at seed $seed")
-      assert(lp == local, s"label-prop vs union-find diverged at seed $seed")
     }
   }
 }

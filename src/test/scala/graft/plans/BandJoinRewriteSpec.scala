@@ -104,22 +104,61 @@ class BandJoinRewriteSpec extends SparkSpec {
 
   test("rewritten band join returns exactly the nested-loop result") {
     tables()
-    val rewritten = ext.sql(
-      """SELECT a_id, b_id FROM ta JOIN tb
-        |ON b_ts - a_ts >= 0 AND b_ts - a_ts <= 10""".stripMargin)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // same query on the extension-free session → BNLJ reference result
+    // same tables on the extension-free session → BNLJ reference result
     import spark.implicits._
     (1 to 500).map(i => (i.toLong, (i * 7L) % 1000))
       .toDF("a_id", "a_ts").createOrReplaceTempView("ta0")
     (1 to 500).map(i => (i.toLong, (i * 13L) % 1000))
       .toDF("b_id", "b_ts").createOrReplaceTempView("tb0")
-    val reference = spark.sql(
-      """SELECT a_id, b_id FROM ta0 JOIN tb0
-        |ON b_ts - a_ts >= 0 AND b_ts - a_ts <= 10""".stripMargin)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rewritten == reference)
-    assert(reference.nonEmpty)
+    val q = """SELECT a_id, b_id FROM %s JOIN %s
+              |ON b_ts - a_ts >= 0 AND b_ts - a_ts <= 10""".stripMargin
+    // the band alone, and the band plus a residual the rule must keep
+    for (extra <- Seq("", " AND a_id % 3 <> b_id % 3")) {
+      val rewritten = ext.sql(q.format("ta", "tb") + extra)
+      assert(physical(rewritten).contains("__graft_band_bucket"), extra)
+      val reference = spark.sql(q.format("ta0", "tb0") + extra)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == reference, extra)
+      assert(reference.nonEmpty, extra)
+    }
+  }
+
+  test("candidatePairs plans through the rewrite and equals the nested-loop pairs") {
+    import ext.implicits._
+    val rnd = new scala.util.Random(17)
+    // 4 users × 40 sessions over 6 days; one in five runs past midnight
+    // (end_s > 86400), so a later-dated session can start before it ends —
+    // the reference's negative cross-midnight gaps
+    val rows = for (u <- 1L to 4L; i <- 0 until 40) yield {
+      val start = rnd.nextInt(86000)
+      val dur = if (rnd.nextInt(5) == 0) 86400 + rnd.nextInt(86400) else 60 + rnd.nextInt(7200)
+      (u, f"2024-01-${1 + rnd.nextInt(6)}%02d", start, start + dur, s"s$u-$i",
+        Seq.fill(3)(rnd.nextFloat() - 0.5f))
+    }
+    val sess = graft.operators.SessionOps.withIds(
+      rows.toDF("user_id", "ds", "start_s", "end_s", "description", "embedding")
+        .select(col("user_id"), to_date(col("ds")).as("date"), col("start_s"),
+          col("end_s"), col("description"), col("embedding")))
+    // thresholds every in-band pair passes: the output is the join itself
+    val open = (1L to 4L).map(u => (u, 1e6, -2.0))
+      .toDF("user_id", "time_threshold_s", "similarity_threshold")
+    val maxGapS = 3600L
+    val got = graft.operators.SessionOps.candidatePairs(sess, open, maxGapS)
+    assert(physical(got).contains("__graft_band_bucket"), physical(got))
+    val byUser = sess.select(col("user_id"), col("id"), unix_date(col("date")),
+        col("start_s"), col("end_s"), col("start_ts"), col("end_ts"))
+      .as[(Long, Long, Int, Int, Int, Long, Long)].collect().groupBy(_._1)
+    val ordered = (for {
+      (u, ss) <- byUser.toSeq; a <- ss.toSeq; b <- ss.toSeq
+      if a._2 != b._2 && (b._3 > a._3 || (b._3 == a._3 && b._4 >= a._5))
+    } yield (u, a._2, b._2, b._6 - a._7)).toSet
+    // both band ends cut ordered pairs, and negative gaps stay in band
+    assert(ordered.exists(_._4 < -86400L) && ordered.exists(_._4 > maxGapS))
+    val reference = ordered.filter(p => p._4 >= -86400L && p._4 <= maxGapS)
+    assert(reference.exists(_._4 < 0) && reference.exists(_._4 > 0))
+    val pairs = got.select("user_id", "a_id", "b_id", "gap_s")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(pairs == reference)
   }
 
   test("r <= l + lit form and strict bounds are recognized; equivalence holds") {
