@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Entity resolution / record linkage — the registry-reconciliation stage
   * (Fellegi & Sunter 1969 lineage) a curation pipeline runs when two
@@ -18,39 +19,22 @@ import org.apache.spark.sql.functions._
   *    ranks — catches what the equi-key missed, O(N·w) pairs total.
   *
   * Scale shapes: equiBlock is one shuffle on the key. Sorted
-  * neighborhood's global rank is the TWO-PASS form (range-repartition →
-  * per-partition ranks + broadcast partition-size offsets), never a
-  * single-partition window; the rank-band pairing is an equi-join of
-  * each left rank's 2w+1 neighbour ranks (no nested loop). Matching is
-  * two per-entity windows over already-blocked candidates. */
+  * neighborhood's global rank is one range-partitioned sort numbered in
+  * place, never a single-partition window; the rank-band pairing is an
+  * equi-join of each left rank's 2w+1 neighbour ranks (no nested loop).
+  * Matching is two per-entity windows over already-blocked candidates. */
 object RecordLinkage {
 
-  /** Dense global 1-based rank of `df` by (`orderCol`, tie cols), without
-    * a single-partition window: range-repartition by the ordering, rank
-    * within each partition, add the partition-prefix offsets (collected
-    * from a count pass over the CACHED pid-annotated frame — the cache
-    * pins one RangePartitioner sample so both passes see the same
-    * boundaries). */
-  def withGlobalRank(df: DataFrame, orderCols: Seq[String], rankCol: String,
-      partitions: Int = 32): DataFrame = {
-    val ordering = orderCols.map(col)
-    val pidded = df.repartitionByRange(partitions, ordering: _*)
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-    val sizes = pidded.groupBy(col("__pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until partitions).scanLeft(0L) {
-      (acc, p) => acc + sizes.getOrElse(p, 0L)
-    }
-    val offsetExpr = (0 until partitions).foldLeft(lit(0L)) { (acc, p) =>
-      when(col("__pid") === p, lit(offsets(p))).otherwise(acc)
-    }
-    pidded
-      .withColumn(rankCol,
-        row_number().over(
-          Window.partitionBy(col("__pid")).orderBy(ordering: _*)).cast("long")
-          + offsetExpr)
-      .drop("__pid")
+  /** Dense global 1-based rank of `df` by `orderCols` (the caller's tie
+    * columns included), without a single-partition window: one
+    * range-partitioned sort, numbered in place by `RDD.zipWithIndex`. Its
+    * partition-size job and every read of the output read that one sort
+    * shuffle, so the range partitioner is sampled once and nothing is
+    * cached. */
+  def withGlobalRank(df: DataFrame, orderCols: Seq[String], rankCol: String): DataFrame = {
+    val sorted = df.sort(orderCols.map(col): _*)
+    val ranked = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
+    df.sparkSession.createDataFrame(ranked, sorted.schema.add(rankCol, LongType, nullable = false))
   }
 
   /** Pass A — equi-key blocking: inputs carry (`<side>id`, `<side>_name`,

@@ -157,92 +157,30 @@ object SessionOps {
     * reference are unchanged (rank-1 over similarity, ties at the 1e-9
     * grid broken toward the smaller child id).
     *
-    * Scale shape: users at or below `exactUserLimit` sessions run the
-    * reference's all-ordered-pairs form; users ABOVE it are pruned by
-    * default — candidates are pairs sharing a random-hyperplane LSH bucket
-    * in any of `nTables` tables, so one hot user stops being a quadratic
-    * straggler partition. The split is declarative (one plan, no driver
-    * action), rank-1 + threshold semantics are identical on both branches,
-    * and the output keeps only edges ABOVE the per-user p90 similarity
-    * threshold — exactly the high-cosine pairs hyperplane LSH is built to
-    * retain; an oversized user's edge set is approximate only in that an
-    * LSH miss can replace a parent's argmax with its best candidate. */
-  def similarityGraph(sessions: DataFrame, thresholds: DataFrame,
-      exactUserLimit: Long = 5000L, nPlanes: Int = 6, nTables: Int = 8,
-      bucketCap: Int = graft.dedup.Dedup.DefaultBucketCap): DataFrame = {
+    * Scale shape: one exact ordered all-pairs join per user, quadratic in
+    * that user's session count, which the recent path bounds by its 15-day
+    * window (`TakeoutIngest`): at one session per chunk of up to 15 rows,
+    * a user reaches 5,000 sessions only past ~75,000 activity rows in 15
+    * days. */
+  def similarityGraph(sessions: DataFrame, thresholds: DataFrame): DataFrame = {
     val a = sessions.select(
       col("user_id"), col("id").as("parent_id"), col("date").as("a_date"),
       col("end_s").as("a_end_s"), col("embedding").as("a_emb"))
     val b = sessions.select(
       col("user_id"), col("id").as("child_id"), col("date").as("b_date"),
       col("start_s").as("b_start_s"), col("embedding").as("b_emb"))
-    val counts = sessions.groupBy(col("user_id")).agg(count(lit(1)).as("__n"))
-    def small(df: DataFrame) = df.join(counts, "user_id")
-      .filter(col("__n") <= exactUserLimit).drop("__n")
-    def big(df: DataFrame) = df.join(counts, "user_id")
-      .filter(col("__n") > exactUserLimit).drop("__n")
     val ordering = (col("b_date") > col("a_date")) ||
       (col("b_date") === col("a_date") && col("b_start_s") >= col("a_end_s"))
     // integer fixed point at the rank/threshold boundary (see scaladoc)
     def i9(c: Column): Column = graft.functions.fixed_point(c, 1e9)
-    val pairCols = Seq(col("user_id"), col("parent_id"), col("child_id"),
-      i9(cosine_similarity(col("a_emb"), col("b_emb"))).as("sim_i9"))
-    val exactPairs = small(a).join(small(b), Seq("user_id"))
-      .filter(col("parent_id") =!= col("child_id") && ordering)
-      .select(pairCols: _*)
-    // LSH planes are hash-derived per (seed, plane, dim-index), so the dim
-    // argument is a precompute BOUND: the hash consumes min(dim, |vec|)
-    // elements. 4096 covers every realistic embedding width (the stub is
-    // 64, the reference 1024, large models ≤ 3072); a vector wider than
-    // the bound would have its tail ignored by the bucket hash, weakening
-    // (not breaking) the prune, since the final rank re-scores exactly.
-    def buckets(vec: Column): Column = explode(array((0 until nTables).map(t =>
-      struct(lit(t).as("t"),
-        graft.functions.hyperplane_lsh(vec, 4096, nPlanes, t.toLong).as("b"))): _*))
-    // One bucketed frame (buckets computed once per session, not once per
-    // join side), capped per (user, table, bucket) via the hybrid star cap
-    // (Dedup.capBucketsStar): a hot user whose sessions are near-identical
-    // would otherwise put B of them into one hyperplane bucket and emit B²
-    // candidates — the exact quadratic the pruned branch exists to avoid.
-    // Members beyond the cap link to the bucket's representative (both
-    // temporal orientations, O(B) pairs), so every session still reaches
-    // the exact-cosine rank; the kept set keeps the all-pairs semantics.
-    val (kept, star) = graft.dedup.Dedup.capBucketsStar(
-      big(sessions.select(col("user_id"), col("id"), col("date"),
-          col("start_s"), col("end_s"), col("embedding")))
-        .withColumn("tb", buckets(col("embedding"))),
-      Seq("user_id", "tb"), "id",
-      Seq("date", "start_s", "end_s", "embedding"), bucketCap,
-      "simgraph_bucket_cap")
-    val pa = kept.select(col("user_id"), col("tb"),
-      col("id").as("parent_id"), col("date").as("a_date"),
-      col("end_s").as("a_end_s"), col("embedding").as("a_emb"))
-    val pb = kept.select(col("user_id"), col("tb"),
-      col("id").as("child_id"), col("date").as("b_date"),
-      col("start_s").as("b_start_s"), col("embedding").as("b_emb"))
-    val keptPairs = pa.join(pb, Seq("user_id", "tb"))
-      .filter(col("parent_id") =!= col("child_id") && ordering)
-      .select(pairCols: _*)
-    def orient(par: Column, parPay: Column, chi: Column, chiPay: Column) =
-      star.select(col("user_id"),
-        par.as("parent_id"), chi.as("child_id"),
-        parPay.getField("date").as("a_date"),
-        parPay.getField("end_s").as("a_end_s"),
-        parPay.getField("embedding").as("a_emb"),
-        chiPay.getField("date").as("b_date"),
-        chiPay.getField("start_s").as("b_start_s"),
-        chiPay.getField("embedding").as("b_emb"))
-    val starPairs = orient(col("id_a"), col("pay_a"), col("id_b"), col("pay_b"))
-      .unionByName(orient(col("id_b"), col("pay_b"), col("id_a"), col("pay_a")))
-      .filter(ordering)
-      .select(pairCols: _*)
-    val prunedPairs = keptPairs.unionByName(starPairs)
     // rank-1 per parent as a partial-aggregatable max(struct) instead of a
     // row_number window — map-side combine shrinks the O(pairs) shuffle to
-    // one row per parent (and absorbs duplicate candidates from multiple
-    // LSH tables); lexicographic struct max = (similarity DESC, child_id
-    // ASC) rank 1, identical to the reference's ROW_NUMBER filter.
-    exactPairs.unionByName(prunedPairs)
+    // one row per parent; lexicographic struct max = (similarity DESC,
+    // child_id ASC) rank 1, identical to the reference's ROW_NUMBER filter.
+    a.join(b, Seq("user_id"))
+      .filter(col("parent_id") =!= col("child_id") && ordering)
+      .select(col("user_id"), col("parent_id"), col("child_id"),
+        i9(cosine_similarity(col("a_emb"), col("b_emb"))).as("sim_i9"))
       .groupBy(col("user_id"), col("parent_id"))
       .agg(max(struct(col("sim_i9"),
         (lit(0L) - col("child_id")).as("nd"))).as("m"))

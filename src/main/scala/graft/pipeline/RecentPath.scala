@@ -8,7 +8,8 @@ import graft.operators.{Sessionize, SessionOps}
 /** The reference's recent path end-to-end (SURVEY §3 EP2): activity →
   * LLM sessions → embeddings → adaptive thresholds → candidate pairs (a
   * band join on `user_id` that `plans.BandJoinRewrite` buckets) →
-  * connected-components merge → top-1 similarity graph.
+  * connected-components merge → top-1 similarity graph (one exact
+  * all-pairs join per user; the 15-day window bounds its size).
   *
   * Every stage is a DataFrame transformation; enrichment stages cache
   * their output (non-deterministic boundary — Catalyst must not re-execute
@@ -38,9 +39,6 @@ object RecentPath {
       sessions,
       thresholds,
       SessionOps.merge(sessions, SessionOps.candidatePairs(sessions, thresholds)),
-      // explicit: users above the budget get LSH-pruned candidates (an LSH
-      // miss can replace a parent's argmax) — the deliberate scale trade;
-      // pass Long.MaxValue here to force reference-exact all-pairs instead
-      SessionOps.similarityGraph(sessions, thresholds, exactUserLimit = 5000L))
+      SessionOps.similarityGraph(sessions, thresholds))
   }
 }

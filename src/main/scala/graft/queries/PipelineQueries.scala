@@ -266,16 +266,13 @@ object PipelineQueries {
     * the rank-1-per-parent argmax, the threshold filter, and the
     * `1 − similarity` edge weight (assets/recent_history.py:450-527).
     *
-    * The oracle replays the EXACT branch of similarityGraph — valid while
-    * no test-SF user exceeds exactUserLimit sessions (~200/user vs 5000;
-    * a datagen change crossing that line would fail the row compare, not
-    * silently weaken it). Float policy (round-then-compare, round 10):
-    * BOTH engines rank and threshold-compare on integer fixed point
-    * sim_i9 = round(sim·1e9) AS BIGINT — raw-double ranking let a last-ulp
-    * delta in the driver DuckDB's list_cosine_similarity/quantile_cont
-    * flip a rank-1 winner while preserving the row count (the observed
-    * r9 driver-hash failure signature). The emitted weight is the exact
-    * integer weight_ppb = 1e9 − sim_i9 (BIGINT in both engines). */
+    * Float policy (round-then-compare, round 10): BOTH engines rank and
+    * threshold-compare on integer fixed point sim_i9 = round(sim·1e9) AS
+    * BIGINT — raw-double ranking let a last-ulp delta in the driver
+    * DuckDB's list_cosine_similarity/quantile_cont flip a rank-1 winner
+    * while preserving the row count (the observed r9 driver-hash failure
+    * signature). The emitted weight is the exact integer
+    * weight_ppb = 1e9 − sim_i9 (BIGINT in both engines). */
   val q52Graph: QueryDef = {
     def p = graft.core.Scratch.lastDir("q52_pipeline_graph")
     QueryDef.sql(
@@ -319,9 +316,7 @@ object PipelineQueries {
           col("end_s"), col("embedding"))
         .write.mode("overwrite").parquet(s"$path/sessions")
       graft.operators.SessionOps
-        .similarityGraph(sessions,
-          graft.operators.SessionOps.thresholds(sessions),
-          exactUserLimit = 5000L)
+        .similarityGraph(sessions, graft.operators.SessionOps.thresholds(sessions))
         .select(col("user_id"), col("parent_id"), col("child_id"), col("weight_ppb"))
         .orderBy(col("user_id"), col("parent_id"))
     }

@@ -924,6 +924,7 @@ object TextQueries {
           / col("n_tokens"), 9))
       .orderBy(col("es_key").desc, col("doc_id"))
       .limit(100)
+    // bounded: the unpartitioned window ranks the ≤ 100 rows the limit kept
     val w = Window.orderBy(col("es_key").desc, col("doc_id"))
     top.withColumn("rank", row_number().over(w).cast("long"))
       .select(col("rank"), col("doc_id"), col("n_tokens"),
@@ -2962,6 +2963,7 @@ object TextQueries {
     val pr = graft.graph.GraphOps.weightedPagerankPpm(edges, nodes,
       iters = 3)
     val top = pr.orderBy(col("r").desc, col("id")).limit(30)
+    // bounded: the unpartitioned window ranks the ≤ 30 rows the limit kept
     top.withColumn("rnk", row_number().over(
         Window.orderBy(col("r").desc, col("id"))).cast("long"))
       .select(col("rnk"), col("id").as("tok"), col("r").as("rank_ppm"))
@@ -3258,6 +3260,7 @@ object TextQueries {
         expr("(200 * n_g) div n").as("base"),
         expr("(200 * n_g) % n").as("rem"))
     val short = quo.agg((lit(200L) - sum(col("base"))).as("extra"))
+    // bounded: the unpartitioned window ranks one row per language
     val alloc = quo
       .withColumn("rr", row_number().over(
         Window.orderBy(col("rem").desc, col("lang"))))

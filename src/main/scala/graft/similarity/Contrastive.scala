@@ -17,12 +17,12 @@ import graft.functions.cosine_similarity
   * (anchor, attempt, seed) — re-runs and both engines agree exactly.
   *
   * Scale shape: positives are per-label all-pairs (labels are
-  * bounded-size groups — the per-user contract everywhere else in the
-  * engine; an unbounded label would route through the LSH-bucketed
-  * variant like `SessionOps.similarityGraph`). Negatives cost k small
-  * equi-joins on a dense row index — no pair blowup. The index is the
-  * two-pass `RecordLinkage.withGlobalRank` by id (range-repartition plus
-  * partition offsets), never a single-partition window.
+  * bounded-size groups, as users are for `SessionOps.similarityGraph`;
+  * an unbounded label would need an LSH-pruned candidate set such as
+  * `Knn.lshCandidates`). Negatives cost k small equi-joins on a dense
+  * row index — no pair blowup. The index is
+  * `RecordLinkage.withGlobalRank` by id (one range-partitioned sort,
+  * indexed in place), never a single-partition window.
   */
 object Contrastive {
 

@@ -34,28 +34,6 @@ object ScaleSmoke {
           concat(col("text"), lit(s" copyid$i")).as("text"), col("lang"))
       }.reduce(_ unionByName _)
 
-    /** Clustered-direction session corpus for the similarity-graph smoke:
-      * per user, `perUser` single-date sessions ordered by start_s, each
-      * embedded as one of 40 hash-random directions plus small noise
-      * (same-direction cosine ≈ 0.97, cross ≈ 0). */
-    def lshSmokeSessions(spark: SparkSession, users: Int, perUser: Int)
-        : (DataFrame, DataFrame) = {
-      val sess = spark.range(users.toLong * perUser).select(
-        (col("id") / perUser).cast("long").as("user_id"),
-        (col("id") + lit(1L)).as("id"),
-        to_date(lit("2024-01-01")).as("date"),
-        (col("id") % perUser).cast("int").as("start_s"),
-        (col("id") % perUser).cast("int").as("end_s"),
-        expr(s"""transform(sequence(1, 64), j ->
-          cast((pmod(hash(pmod(id, 40) * 131 + j), 1000) / 1000.0 - 0.5)
-             + 0.15 * (pmod(hash(id * 31 + j), 1000) / 1000.0 - 0.5) as float))""")
-          .as("embedding"))
-      val th = spark.range(users.toLong).select(
-        col("id").as("user_id"), lit(0.0).as("time_threshold_s"),
-        lit(0.5).as("similarity_threshold"))
-      (sess, th)
-    }
-
     def time(name: String, k: Int)(df: => DataFrame): Unit = {
       if (!name.contains(opFilter)) return
       val t0 = System.nanoTime()
@@ -215,20 +193,6 @@ object ScaleSmoke {
         graft.operators.IterativeQuantile.orderStatistics(
           v, "v", Seq(n / 2, (9 * n) / 10, n - 1))
       }
-      time("similarity_graph_lsh", k) {
-        // The LSH branch of SessionOps.similarityGraph (VERDICT r9 item 5:
-        // the branch the 100 TB story depends on had zero measured
-        // wall-clock). Within-user growth is the quadratic pressure case:
-        // S = 1000·k sessions per user, so at factor 10 each user is 2×
-        // past the real exactUserLimit=5000 gate. Embeddings are 40
-        // clustered directions + noise — every parent's argmax is a
-        // same-direction later session (the high-cosine regime hyperplane
-        // LSH is built to retain). exactUserLimit=0 forces the pruned
-        // branch; wall must grow far below the S² of the exact form.
-        val (sess, th) = lshSmokeSessions(spark, users = 4, perUser = 1000 * k)
-        graft.operators.SessionOps.similarityGraph(
-          sess, th, exactUserLimit = 0L)
-      }
       if ("video_frame_index".contains(opFilter)) {
         // Container walk + frame slicing is per-blob linear work; wall
         // must track blob count. Media is synthesized once and CACHED so
@@ -312,41 +276,6 @@ object ScaleSmoke {
         time("blocklist_scan", k)(
           graft.text.Blocklist.scan(docs, "doc_id", "text",
             Seq("slow fast", "hash value", "table part", "merge", "window the")))
-      }
-      if (k == 1 && "similarity_graph_lsh_sweep".contains(opFilter)) {
-        // the nTables recall/cost dial, measured (NEXT r10 backlog item):
-        // same clustered-direction corpus, exact edge set as ground truth
-        val (sess, th) = lshSmokeSessions(spark, users = 4, perUser = 1000)
-        val exactE = graft.operators.SessionOps
-          .similarityGraph(sess, th, exactUserLimit = Long.MaxValue)
-          .select(col("parent_id"), col("child_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        for (t <- Seq(2, 4, 8, 16)) {
-          val t0 = System.nanoTime()
-          val e = graft.operators.SessionOps
-            .similarityGraph(sess, th, exactUserLimit = 0L, nTables = t)
-            .select(col("parent_id"), col("child_id")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet
-          val sec = (System.nanoTime() - t0) / 1e9
-          val agree = e.intersect(exactE).size.toDouble / exactE.size
-          println(f"""{"op":"similarity_graph_lsh_sweep","n_tables":$t,"agreement":$agree%.4f,"sec":$sec%.2f}""")
-        }
-      }
-      if (k == 1 && "similarity_graph_lsh_recall".contains(opFilter)) {
-        // recall assertion at the comparable scale: the pruned edge set
-        // must agree with the exact all-pairs edge set on ≥90% of edges
-        // (an LSH miss can only replace an argmax with its best candidate)
-        val (sess, th) = lshSmokeSessions(spark, users = 4, perUser = 1000)
-        def edges(limit: Long) = graft.operators.SessionOps
-          .similarityGraph(sess, th, exactUserLimit = limit)
-          .select(col("parent_id"), col("child_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val exactE = edges(Long.MaxValue)
-        val lshE = edges(0L)
-        val agree = lshE.intersect(exactE).size.toDouble / exactE.size
-        println(f"""{"op":"similarity_graph_lsh_recall","exact_edges":${exactE.size},"lsh_edges":${lshE.size},"agreement":$agree%.4f}""")
-        require(agree >= 0.9,
-          f"LSH similarity-graph recall $agree%.4f below the 0.9 smoke floor")
       }
       time("setsim_prefix_join", k) {
         // EXACT PPJoin at scale: per-copy token suffixes keep the copies'

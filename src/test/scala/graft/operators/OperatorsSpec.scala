@@ -219,72 +219,96 @@ class SessionOpsSpec extends SparkSpec {
     // a→b (sim 1 > 0.5); b's only later is c (sim 0, filtered); c has none
     assert(g.length == 1)
     assert(math.abs(g(0).getAs[Double]("weight")) < 1e-9)
-  }
 
-  test("similarity graph: LSH-pruned path for big users matches all-pairs") {
-    // 12 sessions per user cycling 3 orthogonal directions: every parent's
-    // true top-1 is a later IDENTICAL vector (sim 1.0), and identical
-    // vectors share every LSH bucket — the pruned candidate set provably
-    // contains each argmax, so the outputs must be set-equal.
-    val dirs = Seq(Seq(1f, 0f, 0f), Seq(0f, 1f, 0f), Seq(0f, 0f, 1f))
-    val rows = for (u <- Seq(1L, 2L); i <- 0 until 12)
-      yield (u, f"2024-01-${i + 1}%02d", 36000, 36600, s"s$u-$i", dirs(i % 3))
-    val sess = SessionOps.withIds(sessionsDf(rows: _*))
-    val thresholds = Seq((1L, 0.0, 0.5), (2L, 0.0, 0.5))
-      .toDF("user_id", "time_threshold_s", "similarity_threshold")
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("parent_id"),
-        r.getAs[Long]("child_id"), math.round(r.getAs[Double]("weight") * 1e9))).toSet
-    val exact = norm(SessionOps.similarityGraph(sess, thresholds,
-      exactUserLimit = Long.MaxValue))
-    val pruned = norm(SessionOps.similarityGraph(sess, thresholds,
-      exactUserLimit = 0L))
-    assert(exact.nonEmpty)
-    assert(pruned == exact)
-    // mixed routing: user 1 (12 sessions) above the limit → pruned branch,
-    // a 3-session user below it → exact branch; union must still match
-    val mixedRows = rows.filter(_._1 == 1L) ++
-      (0 until 3).map(i => (9L, f"2024-02-${i + 1}%02d", 36000, 36600, s"t$i", dirs(0)))
-    val mixedSess = SessionOps.withIds(sessionsDf(mixedRows: _*))
-    val mixedT = Seq((1L, 0.0, 0.5), (9L, 0.0, 0.5))
-      .toDF("user_id", "time_threshold_s", "similarity_threshold")
-    assert(norm(SessionOps.similarityGraph(mixedSess, mixedT, exactUserLimit = 5L))
-      == norm(SessionOps.similarityGraph(mixedSess, mixedT, exactUserLimit = Long.MaxValue)))
-  }
-
-  test("similarity graph: hot-bucket cap keeps the pruned branch linear, edges stay valid") {
-    // all sessions of one direction → every LSH bucket of every table holds
-    // the whole user (the degenerate hot bucket); bucketCap=2 forces the
-    // star path for most members. Every emitted edge must still be a valid
-    // (later, sim-above-threshold) pair, parents are a subset of the exact
-    // run's parents, and identical vectors mean weight 0 everywhere.
-    val rows = for (i <- 0 until 12)
-      yield (1L, f"2024-01-${i + 1}%02d", 36000, 36600, s"s$i", Seq(1f, 0f, 0f))
-    val sess = SessionOps.withIds(sessionsDf(rows: _*))
-    val thresholds = Seq((1L, 0.0, 0.5)).toDF("user_id", "time_threshold_s", "similarity_threshold")
-    val exact = SessionOps.similarityGraph(sess, thresholds,
-        exactUserLimit = Long.MaxValue)
-      .select("parent_id").as[Long].collect().toSet
-    val cappedDf = SessionOps.similarityGraph(sess, thresholds,
-      exactUserLimit = 0L, bucketCap = 2)
-    val capped = cappedDf.select(col("parent_id"), col("weight")).collect()
-    assert(capped.nonEmpty)
-    capped.foreach { r =>
-      assert(exact.contains(r.getLong(0)))
-      assert(math.abs(r.getDouble(1)) < 1e-9)
+    // Random users against a nested-loop reference on the same 1e-9 grid.
+    // Small-integer vectors put many sims on the same grid point, so the
+    // smaller-child tie-break decides many ranks. Each user also carries
+    // three planted sessions on one day: p (10:00-11:00), q starting at
+    // p's end (same-day, b_start_s == a_end_s) and r later, all parallel.
+    val rnd = new scala.util.Random(17)
+    val users = (1L to 6L)
+    val rows = users.flatMap { u =>
+      val random = (0 until 12).map { i =>
+        val day = 1 + rnd.nextInt(3)
+        val start = rnd.nextInt(20) * 1800
+        val v = Seq.fill(3)((1 + rnd.nextInt(3)).toFloat) // never a zero vector
+        (u, f"2024-01-$day%02d", start, start + 600 + rnd.nextInt(3) * 600, s"r$u-$i", v)
+      }
+      val pv = Seq(u.toFloat, 2f, 1f)
+      random ++ Seq(
+        (u, "2024-01-05", 36000, 39600, s"p$u", pv),
+        (u, "2024-01-05", 39600, 40200, s"q$u", pv),
+        (u, "2024-01-05", 45000, 45600, s"r$u", pv))
     }
-    // never silent: the cap reports its demotions through the observe
-    // counter the plan carries
-    val m = graft.operators.ObservedMetrics.collect(cappedDf).collect()
-      .map(r => r.getString(1) -> r.getDouble(2)).toMap
-    assert(m("demoted_members") > 0.0)
-    assert(m("max_bucket_members") == 12.0)
-    // a cap ABOVE the bucket size reproduces the uncapped pruned result
-    def norm2(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("parent_id"), r.getAs[Long]("child_id"))).toSet
-    assert(norm2(SessionOps.similarityGraph(sess, thresholds, exactUserLimit = 0L,
-        bucketCap = 64))
-      == norm2(SessionOps.similarityGraph(sess, thresholds, exactUserLimit = 0L)))
+    val rs = SessionOps.withIds(sessionsDf(rows: _*)).cache()
+    val local = rs.select("user_id", "id", "date", "start_s", "end_s", "embedding")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDate(2).toLocalDate,
+        r.getInt(3), r.getInt(4), r.getSeq[Float](5).map(_.toDouble)))
+    def i9(x: Double): Long = { val v = x * 1e9; (math.signum(v) * math.floor(math.abs(v) + 0.5)).toLong }
+    def cos(x: Seq[Double], y: Seq[Double]): Double = {
+      val dot = x.zip(y).map { case (p, q) => p * q }.sum
+      dot / (math.sqrt(x.map(v => v * v).sum) * math.sqrt(y.map(v => v * v).sum))
+    }
+    // best later child per parent: max sim_i9, then the smaller child id
+    val best = (for {
+      a <- local; b <- local
+      if a._1 == b._1 && a._2 != b._2 &&
+        (b._3.isAfter(a._3) || (b._3 == a._3 && b._4 >= a._5))
+    } yield (a, b, i9(cos(a._6, b._6))))
+      .groupBy(_._1._2).values
+      .map(_.minBy { case (_, b, sim) => (-sim, b._2) }).toSeq
+    // thresholds: odd users get their lowest best sim exactly (strict
+    // compare, so those parents keep no edge), even users a fixed 0.8
+    val th = users.map { u =>
+      u -> (if (u % 2 == 1) best.filter(_._1._1 == u).map(_._3).min / 1e9 else 0.8)
+    }.toMap
+    val expected = best.filter { case (a, _, sim) => sim > i9(th(a._1)) }
+      .map { case (a, b, sim) => (a._1, a._2, b._2, 1000000000L - sim) }.toSet
+    val got = SessionOps.similarityGraph(rs, th.toSeq.map { case (u, t) => (u, 0.0, t) }
+        .toDF("user_id", "time_threshold_s", "similarity_threshold"))
+      .select("user_id", "parent_id", "child_id", "weight_ppb", "weight")
+      .collect().map { r =>
+        assert(r.getDouble(4) == r.getLong(3).toDouble / 1e9)
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+      }
+    assert(got.length == got.toSet.size)
+    assert(got.toSet == expected)
+    // the reference exercised each case it is here for
+    val ties = best.filter { case (a, b, sim) =>
+      local.exists(c => c._1 == a._1 && c._2 > b._2 && c._2 != a._2 &&
+        (c._3.isAfter(a._3) || (c._3 == a._3 && c._4 >= a._5)) && i9(cos(a._6, c._6)) == sim)
+    }
+    assert(ties.size > 10, ties.size)
+    val touching = expected.filter { case (_, p, c, _) =>
+      val (a, b) = (local.find(_._2 == p).get, local.find(_._2 == c).get)
+      a._3 == b._3 && b._4 == a._5
+    }
+    assert(touching.map(_._1) == users.toSet, touching)
+    assert(best.exists { case (a, _, sim) => sim == i9(th(a._1)) })
+    rs.unpersist()
+  }
+
+  test("similarity graph: one exact plan, at most 8 jobs") {
+    // 40 users x 5 sessions: one join, one rank-1 aggregate, one
+    // threshold broadcast (4 jobs here)
+    val rows = for (u <- 1L to 40L; i <- 0 until 5)
+      yield (u, f"2024-01-${i + 1}%02d", 36000, 36600, s"s$u-$i",
+        Seq(1f, (u % 3).toFloat, i.toFloat))
+    val sess = SessionOps.withIds(sessionsDf(rows: _*)).cache()
+    val th = (1L to 40L).map(u => (u, 0.0, 0.5))
+      .toDF("user_id", "time_threshold_s", "similarity_threshold").cache()
+    sess.count(); th.count()
+    val sc = spark.sparkContext
+    val m = graft.core.JobMetrics.install(sc)
+    try {
+      val n = m.group("graph") { SessionOps.similarityGraph(sess, th).count() }
+      m.drain()
+      assert(n == 160L)
+      assert(m.layers("graph").jobs <= 8L, m.layers("graph"))
+    } finally {
+      sc.removeSparkListener(m)
+      sess.unpersist(); th.unpersist()
+    }
   }
 }
 

@@ -11,15 +11,25 @@ class RecordLinkageSpec extends SparkSpec {
   import spark.implicits._
 
   test("withGlobalRank equals the single-window rank at every partitioning") {
+    import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(11)
     val rows = Seq.tabulate(500)(i => (i.toLong, s"n${rnd.nextInt(100)}"))
     val expected = rows.sortBy { case (id, n) => (n, id) }
       .zipWithIndex.map { case ((id, _), r) => id -> (r + 1L) }.toMap
+    val window = rows.toDF("id", "name")
+      .withColumn("rnk", row_number().over(Window.orderBy(col("name"), col("id"))).cast("long"))
+      .select("id", "rnk").as[(Long, Long)].collect().toMap
+    assert(window == expected)
+    val sc = spark.sparkContext
     for (parts <- Seq(1, 5, 32)) {
       val df = rows.toDF("id", "name").repartition(parts)
-      val got = RecordLinkage.withGlobalRank(df, Seq("name", "id"), "rnk")
-        .select("id", "rnk").as[(Long, Long)].collect().toMap
+      val cached = sc.getPersistentRDDs.keySet
+      val ranked = RecordLinkage.withGlobalRank(df, Seq("name", "id"), "rnk")
+      assert(ranked.columns.toSeq == Seq("id", "name", "rnk"))
+      val got = ranked.select("id", "rnk").as[(Long, Long)].collect().toMap
       assert(got == expected, s"parts=$parts")
+      // the rank caches nothing: no persisted RDD outlives a consumed call
+      assert(sc.getPersistentRDDs.keySet == cached, s"parts=$parts")
     }
   }
 
