@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** EXACT all-pairs set-similarity join with prefix filtering — the
   * PPJoin family (Chaudhuri, Ganti & Kaushik ICDE 2006's SSJoin;
@@ -27,7 +28,12 @@ import org.apache.spark.sql.functions._
   * so candidate buckets are small on any natural corpus — the quadratic
   * work concentrates exactly where matches are plausible. One groupBy
   * builds the frequency table; the per-doc prefix is a window bounded by
-  * document length; verification is two equi-joins per candidate pair.
+  * document length; verification is the exploded intersection count —
+  * each candidate joins one side's shingle rows, then the other side's
+  * on (id, tok), and one pair-keyed groupBy counts the overlap. Both set
+  * sizes ride in the candidates, so no size table is joined back, and
+  * every hash build holds flat (id, tok) rows, never per-document
+  * shingle arrays.
   * Degenerate bound (documented, inherent to EXACTNESS): on a corpus of
   * N verbatim-identical documents the ANSWER is C(N, 2) pairs, so no
   * exact algorithm beats quadratic OUTPUT there — the capped/approximate
@@ -35,34 +41,79 @@ import org.apache.spark.sql.functions._
   */
 object SetSimJoin {
 
+  /** [[prefixIndex]]'s on-disk layout, declared once: [[prefixIndex]] and
+    * [[mergeIntoIndex]] emit exactly these columns, and readers of a
+    * persisted index pass it as the read schema (skipping the parquet
+    * schema-inference job). */
+  val indexSchema: StructType = StructType.fromDDL(
+    "id BIGINT, tok STRING, f BIGINT, n BIGINT, is_prefix BOOLEAN, t_ppm BIGINT")
+
+  private def requireThreshold(tPpm: Long): Unit =
+    require(tPpm > 0 && tPpm <= 1000000L, s"tPpm out of (0, 1e6]: $tPpm")
+
+  /** A document's distinct shingles, one `(id, tok)` row each. The
+    * shuffle_hash hint keeps these corpus-sized string rows off the
+    * broadcast path: at scale they could never broadcast, and at bench
+    * scale letting the optimizer broadcast them costs a driver collect +
+    * hash build of ~10^5 string rows PER JOIN (measured: 8.3s → ~3s warm
+    * at sf0.1). */
+  private def shingleRows(docs: DataFrame, idCol: String, textCol: String,
+      shingleK: Int): DataFrame =
+    docs.select(col(idCol).cast("long").as("id"),
+      explode(array_distinct(Dedup.shingles(col(textCol), shingleK))).as("tok"))
+      .hint("shuffle_hash")
+
+  /** Per-shingle document frequency `(tok, f)` of shingle rows. */
+  private def frequencies(rows: DataFrame): DataFrame =
+    rows.groupBy(col("tok")).agg(count(lit(1)).as("f"))
+
+  /** Rarest-first ranking of `(id, tok)` rows under the `(tok, f)`
+    * frequencies: `(id, tok, f, n, pos, is_prefix)` — `pos` orders each
+    * document's shingles by (f, tok), `n` is its set size, and
+    * `is_prefix` marks the first `n − ⌈t·n⌉ + 1` (ppm ceiling). A
+    * shingle absent from `freq` ranks at f = 0: the probe's unseen batch
+    * shingles, rarest under any corpus order. */
+  private def ranked(rows: DataFrame, freq: DataFrame, tPpm: Long): DataFrame = {
+    val byDoc = Window.partitionBy(col("id"))
+    rows.join(freq.hint("shuffle_hash"), Seq("tok"), "left")
+      .withColumn("f", coalesce(col("f"), lit(0L)))
+      .withColumn("pos", row_number().over(byDoc.orderBy(col("f"), col("tok"))))
+      .withColumn("n", count(lit(1)).over(byDoc))
+      .withColumn("is_prefix", col("pos") <=
+        col("n") - expr(s"(${tPpm}L * n + 999999) div 1000000") + 1)
+  }
+
+  /** Exact verification of candidates `(a, b, n_a, n_b)` (ids plus both
+    * set sizes): join side a's shingle rows, then side b's on (id, tok),
+    * count the intersection per pair, keep `i·10^6 ≥ t_ppm·(n_a + n_b − i)`.
+    * Output: (a, b, i_n, u_n, jac_ppm). */
+  private def verify(cand: DataFrame, a: String, b: String,
+      rowsA: DataFrame, rowsB: DataFrame, tPpm: Long): DataFrame =
+    cand
+      .join(rowsA.select(col("id").as(a), col("tok")), a)
+      .join(rowsB.select(col("id").as(b), col("tok")), Seq(b, "tok"))
+      .groupBy(col(a), col(b), col("n_a"), col("n_b"))
+      .agg(count(lit(1)).as("i_n"))
+      .filter(col("i_n") * 1000000L >=
+        lit(tPpm) * (col("n_a") + col("n_b") - col("i_n")))
+      .select(col(a), col(b), col("i_n"),
+        (col("n_a") + col("n_b") - col("i_n")).as("u_n"),
+        expr("(i_n * 1000000) div (n_a + n_b - i_n)").as("jac_ppm"))
+
   /** All pairs (id_a < id_b) with distinct-`shingleK`-shingle Jaccard
     * ≥ `tPpm`/10^6. Output: (id_a, id_b, i_n, u_n, jac_ppm), exact. */
   def jaccardJoin(docs: DataFrame, idCol: String, textCol: String,
       tPpm: Long, shingleK: Int = 3): DataFrame = {
-    require(tPpm > 0 && tPpm <= 1000000L, s"tPpm out of (0, 1e6]: $tPpm")
-    // shuffle_hash hints on every shingle-carrying side: these frames are
-    // corpus-sized (one row per distinct shingle instance), so at scale
-    // they could never broadcast — and at bench scale letting the
-    // optimizer broadcast them costs a driver collect + hash build of
-    // ~10^5 string rows PER JOIN (measured: 8.3s → ~3s warm at sf0.1)
-    val toks = docs.select(col(idCol).cast("long").as("id"),
-      explode(array_distinct(graft.functions.word_shingles(
-        split(col(textCol), " "), shingleK))).as("tok"))
-      .hint("shuffle_hash")
-    val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("f"))
-      .hint("shuffle_hash")
-    val wDoc = Window.partitionBy(col("id")).orderBy(col("f"), col("tok"))
-    val prefix = toks.join(freq, "tok")
-      .withColumn("pos", row_number().over(wDoc))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy(col("id"))))
-      .filter(col("pos") <=
-        col("sz") - expr(s"(${tPpm}L * sz + 999999) div 1000000") + 1)
-      .select(col("id"), col("tok"), col("sz"), col("pos"))
+    requireThreshold(tPpm)
+    val toks = shingleRows(docs, idCol, textCol, shingleK)
+    val prefix = ranked(toks, frequencies(toks), tPpm)
+      .filter(col("is_prefix"))
+      .select(col("id"), col("tok"), col("n"), col("pos"))
       .hint("shuffle_hash")
     // PPJoin LENGTH filter (exact pruning, theorem-preserving):
     // J(a,b) ≥ t ⇒ i ≥ t·u ≥ t·max(|a|,|b|) and i ≤ min(|a|,|b|), so
     // 10^6·min < t_ppm·max cannot reach the threshold — dropped BEFORE
-    // the distinct and the two intersection joins. On same-length
+    // the grouping and the two intersection joins. On same-length
     // corpora it prunes little; on the heterogeneous-length corpora a
     // 100 TB dedup actually sees, it removes the long-vs-short candidate
     // mass the prefix filter alone admits.
@@ -74,58 +125,37 @@ object SetSimJoin {
     // (p_a, p_b) the overlap decomposes around it —
     //   shared before it ≤ min(p_a, p_b) − 1   (consistent order),
     //   the shingle itself = 1,
-    //   shared after it  ≤ min(sz_a − p_a, sz_b − p_b)
-    // — giving i ≤ min(p_a, p_b) + min(sz_a − p_a, sz_b − p_b) =: ub for
+    //   shared after it  ≤ min(n_a − p_a, n_b − p_b)
+    // — giving i ≤ min(p_a, p_b) + min(n_a − p_a, n_b − p_b) =: ub for
     // EVERY shared prefix shingle; the candidate keeps the tightest one.
-    // J ≥ t ⟺ i·(10^6 + t_ppm) ≥ t_ppm·(sz_a + sz_b), so a pair whose ub
+    // J ≥ t ⟺ i·(10^6 + t_ppm) ≥ t_ppm·(n_a + n_b), so a pair whose ub
     // falls below that line cannot pass the exact verify and is dropped
-    // BEFORE the two corpus-sized intersection joins (the grouping
-    // replaces the old distinct — same shuffle, strictly fewer surviving
-    // candidates).
+    // BEFORE the two corpus-sized intersection joins.
     val cand = prefix.select(col("id").as("id_a"), col("tok"),
-        col("sz").as("sz_a"), col("pos").as("pos_a"))
+        col("n").as("n_a"), col("pos").as("pos_a"))
       .join(prefix.select(col("id").as("id_b"), col("tok"),
-        col("sz").as("sz_b"), col("pos").as("pos_b")), "tok")
+        col("n").as("n_b"), col("pos").as("pos_b")), "tok")
       .filter(col("id_a") < col("id_b") &&
-        lit(tPpm) * greatest(col("sz_a"), col("sz_b")) <=
-          lit(1000000L) * least(col("sz_a"), col("sz_b")))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(
-        min(least(col("pos_a"), col("pos_b")) +
-          least(col("sz_a") - col("pos_a"),
-            col("sz_b") - col("pos_b"))).as("ub"),
-        // sz is functionally dependent on the id — min is just "the value"
-        min(col("sz_a")).as("sz_a"), min(col("sz_b")).as("sz_b"))
+        lit(tPpm) * greatest(col("n_a"), col("n_b")) <=
+          lit(1000000L) * least(col("n_a"), col("n_b")))
+      // n is functionally dependent on the id, so grouping on it keeps
+      // one row per pair and carries both sizes to the verify
+      .groupBy(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
+      .agg(min(least(col("pos_a"), col("pos_b")) +
+        least(col("n_a") - col("pos_a"), col("n_b") - col("pos_b"))).as("ub"))
       .filter(col("ub") * lit(1000000L + tPpm) >=
-        lit(tPpm) * (col("sz_a") + col("sz_b")))
-      .select(col("id_a"), col("id_b"))
-    // Exact verification by PER-PAIR set intersection over the documents'
-    // collected shingle sets (r17; was an exploded intersection join —
-    // cand ⋈ toks ⋈ toks + a (id_a, id_b) groupBy — that pushed
-    // Σ_pairs n_a shingle ROWS through two exchanges and a corpus-pair
-    // aggregation; at sf0.1 that is ~18M rows for 310K candidates).
-    // Here each doc contributes ONE array row; the intersection count is
-    // a single codegen'd array_intersect per candidate — the same bytes
-    // move through the two candidate joins, but as 310K rows instead of
-    // 18M, and the verify-side groupBy disappears. Exactness unchanged:
-    // toks is array_distinct'd, so |array_intersect| IS i_n (order
-    // inside collect_list is irrelevant to a set intersection size).
-    val docSets = toks.groupBy(col("id"))
-      .agg(collect_list(col("tok")).as("ts"), count(lit(1)).as("n"))
-    cand
-      .join(docSets.select(col("id").as("id_a"), col("ts").as("ts_a"),
-        col("n").as("n_a")).hint("shuffle_hash"), "id_a")
-      .join(docSets.select(col("id").as("id_b"), col("ts").as("ts_b"),
-        col("n").as("n_b")).hint("shuffle_hash"), "id_b")
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("ts_a"), col("ts_b"))).cast("long").as("i_n"),
-        col("n_a"), col("n_b"))
-      .filter(col("i_n") * 1000000L >=
-        lit(tPpm) * (col("n_a") + col("n_b") - col("i_n")))
-      .select(col("id_a"), col("id_b"), col("i_n"),
-        (col("n_a") + col("n_b") - col("i_n")).as("u_n"),
-        expr("(i_n * 1000000) div (n_a + n_b - i_n)").as("jac_ppm"))
+        lit(tPpm) * (col("n_a") + col("n_b")))
+    verify(cand, "id_a", "id_b", toks, toks, tPpm)
   }
+
+  /** The index row of every ranked shingle, in [[indexSchema]]'s order.
+    * The build threshold travels WITH the index (RLE-compressed to
+    * nothing on disk): prefixes computed under one threshold are
+    * meaningless to a probe or merge at another, and the frame is plain
+    * parquet with nowhere else to carry the contract. */
+  private def indexRows(rankedRows: DataFrame, tPpm: Long): DataFrame =
+    rankedRows.withColumn("t_ppm", lit(tPpm))
+      .select(indexSchema.map(f => col(f.name)): _*)
 
   /** Persistable EXACT-dedup index over a corpus — ONE frame holding
     * every distinct shingle instance with the metadata the probe needs:
@@ -136,26 +166,9 @@ object SetSimJoin {
     * probe each ingest batch against it. */
   def prefixIndex(docs: DataFrame, idCol: String, textCol: String,
       tPpm: Long, shingleK: Int = 3): DataFrame = {
-    require(tPpm > 0 && tPpm <= 1000000L, s"tPpm out of (0, 1e6]: $tPpm")
-    val toks = docs.select(col(idCol).cast("long").as("id"),
-      explode(array_distinct(graft.functions.word_shingles(
-        split(col(textCol), " "), shingleK))).as("tok"))
-      .hint("shuffle_hash")
-    val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("f"))
-      .hint("shuffle_hash")
-    val wDoc = Window.partitionBy(col("id")).orderBy(col("f"), col("tok"))
-    toks.join(freq, "tok")
-      .withColumn("pos", row_number().over(wDoc))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("id"))))
-      .select(col("id"), col("tok"), col("f"), col("n"),
-        (col("pos") <=
-          col("n") - expr(s"(${tPpm}L * n + 999999) div 1000000") + 1)
-          .as("is_prefix"),
-        // the build threshold travels WITH the index (RLE-compressed to
-        // nothing on disk): prefixes computed under one threshold are
-        // meaningless to a probe or merge at another, and the frame is
-        // plain parquet with nowhere else to carry the contract
-        lit(tPpm).as("t_ppm"))
+    requireThreshold(tPpm)
+    val toks = shingleRows(docs, idCol, textCol, shingleK)
+    indexRows(ranked(toks, frequencies(toks), tPpm), tPpm)
   }
 
   /** Fail fast when a persisted index's build threshold disagrees with
@@ -206,39 +219,25 @@ object SetSimJoin {
     * its shingle frequencies. */
   def mergeIntoIndex(batch: DataFrame, idCol: String, textCol: String,
       index: DataFrame, tPpm: Long, shingleK: Int = 3): DataFrame = {
-    require(tPpm > 0 && tPpm <= 1000000L, s"tPpm out of (0, 1e6]: $tPpm")
+    requireThreshold(tPpm)
     requireSameThreshold(index, tPpm)
-    val bt = batch.select(col(idCol).cast("long").as("id"),
-      explode(array_distinct(graft.functions.word_shingles(
-        split(col(textCol), " "), shingleK))).as("tok"))
-      .hint("shuffle_hash")
-    val delta = bt.groupBy(col("tok")).agg(count(lit(1)).as("fd"))
+    val bt = shingleRows(batch, idCol, textCol, shingleK)
+    val delta = frequencies(bt).withColumnRenamed("f", "fd")
     val mergedFreq = index.select(col("tok"), col("f")).distinct()
       .join(delta, Seq("tok"), "full_outer")
       .select(col("tok"),
         (coalesce(col("f"), lit(0L)) + coalesce(col("fd"), lit(0L))).as("f"))
-      .hint("shuffle_hash")
     val touchedIds = index.join(delta.select(col("tok")), Seq("tok"), "left_semi")
       .select(col("id")).distinct()
     val untouched = index.join(touchedIds, Seq("id"), "left_anti")
-      .select(col("id"), col("tok"), col("f"), col("n"), col("is_prefix"),
-        col("t_ppm"))
+      .select(indexSchema.map(f => col(f.name)): _*)
     // identical derivation to prefixIndex, but over stored (id, tok)
     // rows + the merged frequency table instead of a corpus re-shingle
-    def derive(rows: DataFrame): DataFrame = {
-      val wDoc = Window.partitionBy(col("id")).orderBy(col("f"), col("tok"))
-      rows.join(mergedFreq, "tok")
-        .withColumn("pos", row_number().over(wDoc))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy(col("id"))))
-        .select(col("id"), col("tok"), col("f"), col("n"),
-          (col("pos") <=
-            col("n") - expr(s"(${tPpm}L * n + 999999) div 1000000") + 1)
-            .as("is_prefix"),
-          lit(tPpm).as("t_ppm"))
-    }
-    val touchedRows = derive(index.join(touchedIds, Seq("id"), "left_semi")
-      .select(col("id"), col("tok")).hint("shuffle_hash"))
-    untouched.unionByName(touchedRows).unionByName(derive(bt))
+    val touchedRows = index.join(touchedIds, Seq("id"), "left_semi")
+      .select(col("id"), col("tok")).hint("shuffle_hash")
+    untouched
+      .unionByName(indexRows(ranked(touchedRows, mergedFreq, tPpm), tPpm))
+      .unionByName(indexRows(ranked(bt, mergedFreq, tPpm), tPpm))
   }
 
   /** Probe a NEW batch against a persisted [[prefixIndex]]: all pairs
@@ -255,49 +254,26 @@ object SetSimJoin {
     * exact. */
   def probePrefixIndex(batch: DataFrame, idCol: String, textCol: String,
       index: DataFrame, tPpm: Long, shingleK: Int = 3): DataFrame = {
-    require(tPpm > 0 && tPpm <= 1000000L, s"tPpm out of (0, 1e6]: $tPpm")
+    requireThreshold(tPpm)
     requireSameThreshold(index, tPpm)
-    val bt = batch.select(col(idCol).cast("long").as("new_id"),
-      explode(array_distinct(graft.functions.word_shingles(
-        split(col(textCol), " "), shingleK))).as("tok"))
-      .hint("shuffle_hash")
-    val freq = index.select(col("tok"), col("f")).distinct()
-      .hint("shuffle_hash")
-    val wDoc = Window.partitionBy(col("new_id"))
-      .orderBy(col("f0"), col("tok"))
-    val bPrefix = bt.join(freq, Seq("tok"), "left")
-      .withColumn("f0", coalesce(col("f"), lit(0L)))
-      .withColumn("pos", row_number().over(wDoc))
-      .withColumn("bn", count(lit(1)).over(
-        Window.partitionBy(col("new_id"))))
-      .filter(col("pos") <=
-        col("bn") - expr(s"(${tPpm}L * bn + 999999) div 1000000") + 1)
-      .select(col("new_id"), col("tok"), col("bn"))
+    val bt = shingleRows(batch, idCol, textCol, shingleK)
+    val bPrefix = ranked(bt, index.select(col("tok"), col("f")).distinct(), tPpm)
+      .filter(col("is_prefix"))
     // new_id =!= old_id: re-ingesting an id already present in the index
     // must not emit the trivial self-pair (jac_ppm = 1e6) — the caller's
     // contract is pairs BETWEEN the batch and the standing corpus.
     // Length filter as in jaccardJoin: J ≥ t bounds the size ratio, so
     // mismatched-size candidates drop before the intersection joins.
-    val cand = bPrefix
+    val cand = bPrefix.select(col("id").as("new_id"), col("tok"),
+        col("n").as("n_a"))
       .join(index.filter(col("is_prefix"))
-        .select(col("id").as("old_id"), col("tok"), col("n").as("n_o")),
+        .select(col("id").as("old_id"), col("tok"), col("n").as("n_b")),
         "tok")
       .filter(col("new_id") =!= col("old_id") &&
-        lit(tPpm) * greatest(col("bn"), col("n_o")) <=
-          lit(1000000L) * least(col("bn"), col("n_o")))
-      .select(col("new_id"), col("old_id")).distinct()
-    val bSizes = bt.groupBy(col("new_id")).agg(count(lit(1)).as("n_b"))
-    cand
-      .join(bt, "new_id")
-      .join(index.select(col("id").as("old_id"), col("tok"), col("n")),
-        Seq("old_id", "tok"))
-      .groupBy(col("new_id"), col("old_id"), col("n"))
-      .agg(count(lit(1)).as("i_n"))
-      .join(bSizes, "new_id")
-      .filter(col("i_n") * 1000000L >=
-        lit(tPpm) * (col("n_b") + col("n") - col("i_n")))
-      .select(col("new_id"), col("old_id"), col("i_n"),
-        (col("n_b") + col("n") - col("i_n")).as("u_n"),
-        expr("(i_n * 1000000) div (n_b + n - i_n)").as("jac_ppm"))
+        lit(tPpm) * greatest(col("n_a"), col("n_b")) <=
+          lit(1000000L) * least(col("n_a"), col("n_b")))
+      .select(col("new_id"), col("old_id"), col("n_a"), col("n_b"))
+      .distinct()
+    verify(cand, "new_id", "old_id", bt, index, tPpm)
   }
 }

@@ -35,14 +35,10 @@ final class VersionedSetSimIndex(spark: SparkSession, path: String,
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** [[SetSimJoin.prefixIndex]]'s fixed on-disk layout — an explicit
-    * read schema skips the per-read parquet schema-inference job (a
-    * driver round-trip the protocol pays on every version read). */
-  private val indexSchema =
-    "id BIGINT, tok STRING, f BIGINT, n BIGINT, is_prefix BOOLEAN, t_ppm BIGINT"
-
+  // the explicit read schema skips the per-read parquet schema-inference
+  // job (a driver round-trip the protocol pays on every version read)
   private def readVersion(v: Long): DataFrame =
-    spark.read.schema(indexSchema).parquet(s"$path/v$v")
+    spark.read.schema(SetSimJoin.indexSchema).parquet(s"$path/v$v")
 
   // Ledger state cached per instance and kept exact across this
   // instance's own appends — sound under the documented SINGLE-WRITER

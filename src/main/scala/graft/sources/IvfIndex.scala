@@ -74,8 +74,24 @@ final class IvfIndex(spark: SparkSession, path: String) {
     * cid-partitioned staging dir, and installed by per-partition rename —
     * the same per-partition MERGE shape as [[VectorStore.merge]].
     * Centroids drift from optimal as data accretes; rebuild when recall
-    * degrades. */
+    * degrades.
+    *
+    * Crash safety: the install deletes each touched live partition
+    * before renaming its merged copy in, so a crash between the two
+    * leaves the staged copy as the ONLY copy of that partition's
+    * unchanged rows. A staging dir whose write committed (`_SUCCESS`) is
+    * therefore finished first — its partitions installed — before the
+    * assignments are read or staging is overwritten. Re-running the SAME
+    * upsert after a crash then gives the crash-free result: upsert is
+    * replace-by-id, so the changed ids are anti-joined out of wherever
+    * they still live (including a drained partition the crash left
+    * undeleted) and re-inserted at their new homes. */
   def upsert(changes: DataFrame, idCol: String, vecCol: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new org.apache.hadoop.fs.Path(s"$path/assignments_staging")
+    if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS")))
+      install(fs, staging, Seq.empty)
     val asg = assignments
     val assigned = Knn.ivfAssign(
         changes.select(col(idCol).cast("long").as("id"),
@@ -109,34 +125,32 @@ final class IvfIndex(spark: SparkSession, path: String) {
     // RENAME instead of a second read-back write job — two driver
     // round-trips per upsert gone, the install cost is fs metadata.
     val touched = asg.filter(col("cid").isin(touchedCids: _*))
-    val staging = s"$path/assignments_staging"
     touched.join(changedIds, Seq("id"), "left_anti")
       .unionByName(assigned)
       .select(col("id"), col("vec"), col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(staging)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val repopulated = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
+      .write.mode("overwrite").partitionBy("cid").parquet(staging.toString)
+    install(fs, staging, touchedCids)
+  }
+
+  /** Install a committed staging dir: every staged partition replaces its
+    * live copy, and every other `touched` partition is dropped as drained
+    * (a centroid whose last occupant moved away) — the same
+    * per-partition replacement outcome a dynamic partition overwrite +
+    * drained-partition delete gives. Staging goes last, and with it the
+    * cached assignments handle (the store's file set changed). */
+  private def install(fs: org.apache.hadoop.fs.FileSystem,
+      staging: org.apache.hadoop.fs.Path, touched: Seq[Long]): Unit = {
+    val staged = fs.listStatus(staging)
       .filter(_.isDirectory).map(_.getPath.getName)
       .filter(_.startsWith("cid=")).map(_.stripPrefix("cid=").toLong).toSet
-    // Install: every touched partition is replaced by its merged copy, or
-    // dropped when drained (a centroid whose last occupant moved away) —
-    // the same per-partition replacement outcome the previous dynamic
-    // partition overwrite + drained-partition delete produced. Upsert is
-    // replace-by-id, so a crash mid-install retries idempotently: the
-    // re-run re-derives the same merged partitions from the mixed state
-    // (changed ids are anti-joined out of wherever they still live and
-    // re-inserted at their new homes).
-    touchedCids.foreach { c =>
+    (touched ++ staged.toSeq.sorted).distinct.foreach { c =>
       val live = new org.apache.hadoop.fs.Path(s"$path/assignments/cid=$c")
       if (fs.exists(live)) fs.delete(live, true): Unit
-      if (repopulated(c))
-        require(fs.rename(
-          new org.apache.hadoop.fs.Path(s"$staging/cid=$c"), live),
+      if (staged(c))
+        require(fs.rename(new org.apache.hadoop.fs.Path(staging, s"cid=$c"), live),
           s"rename $staging/cid=$c -> $live failed")
     }
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    // the store's file set changed — drop the cached handle
+    fs.delete(staging, true)
     assignmentsDf = None
   }
 

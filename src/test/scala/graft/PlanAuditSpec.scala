@@ -301,6 +301,30 @@ class PlanAuditSpec extends SparkSpec {
     assert(offenders.isEmpty, s"oversized isin literal lists: $offenders")
   }
 
+  /** Queries whose ShuffledHashJoins build a side carrying an array
+    * column: a shuffled hash build cannot spill, so array-heavy build
+    * rows are the unspillable shape (the q208 verify regression). */
+  private def arrayHashBuilds(names: Seq[String]): Seq[String] = {
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    object aqe
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    names.filter { n =>
+      val plan = SparkEntry.queries(n)(spark, sf).queryExecution.executedPlan
+      aqe.collect(plan) { case j: ShuffledHashJoinExec => j }.exists { j =>
+        val build = if (j.buildSide == BuildLeft) j.left else j.right
+        build.output.exists(_.dataType
+          .isInstanceOf[org.apache.spark.sql.types.ArrayType])
+      }
+    }
+  }
+
+  test("no ShuffledHashJoin builds array-typed rows (q208, q213)") {
+    val offenders = arrayHashBuilds(Seq("q208_setsim_join",
+      "q213_lsh_recall_audit"))
+    assert(offenders.isEmpty, s"array-typed hash builds in: $offenders")
+  }
+
   test("partial aggregation precedes the shuffle in q01") {
     // HashAggregate(partial) → Exchange → HashAggregate(final): the
     // map-side-combine shape every big groupBy needs at scale

@@ -32,6 +32,24 @@ class SetSimJoinSpec extends SparkSpec {
         r.getLong(3))).toSet
   }
 
+  /** The two exact paths agree: the join equals the corpus probing its
+    * own index, restricted to new_id < old_id (the probe emits both
+    * orientations), on ids, i_n, u_n and jac_ppm. */
+  private def assertPathsAgree(docs: Seq[(Long, String)], tPpm: Long,
+      k: Int = 3): Unit = {
+    import spark.implicits._
+    val df = docs.toDF("doc_id", "text")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Long, Long, Long, Long)].collect().toSet
+    val joined = SetSimJoin.jaccardJoin(df, "doc_id", "text", tPpm, k)
+      .select("id_a", "id_b", "i_n", "u_n", "jac_ppm")
+    val probed = SetSimJoin.probePrefixIndex(df, "doc_id", "text",
+        SetSimJoin.prefixIndex(df, "doc_id", "text", tPpm, k), tPpm, k)
+      .filter(col("new_id") < col("old_id"))
+      .select("new_id", "old_id", "i_n", "u_n", "jac_ppm")
+    assert(rows(joined) == rows(probed), s"t=$tPpm")
+  }
+
   test("hand fixture: the near-dup pair survives, the unrelated doc does not") {
     val docs = Seq(
       1L -> "the quick brown fox jumps over the lazy dog",
@@ -73,6 +91,7 @@ class SetSimJoinSpec extends SparkSpec {
       val docs = base ++ planted
       for (t <- Seq(300000L, 500000L, 700000L)) {
         assert(run(docs, t) == brute(docs, t, 3), s"trial $trial t=$t")
+        assertPathsAgree(docs, t)
       }
     }
   }
@@ -102,6 +121,7 @@ class SetSimJoinSpec extends SparkSpec {
     val docs = shorts ++ longs ++ nearDup
     for (t <- Seq(300000L, 500000L, 800000L)) {
       assert(run(docs, t) == brute(docs, t, 3), s"t=$t")
+      assertPathsAgree(docs, t)
     }
   }
 

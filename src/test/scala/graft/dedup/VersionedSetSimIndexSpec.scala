@@ -43,6 +43,14 @@ class VersionedSetSimIndexSpec extends SparkSpec {
     val rebuilt = SetSimJoin.prefixIndex(all.toDF("doc_id", "text"),
       "doc_id", "text", T)
     assert(rowSet(idx.live()) == rowSet(rebuilt))
+    // both writers emit exactly the layout readers pass as read schema
+    def layout(schema: org.apache.spark.sql.types.StructType) =
+      schema.map(f => f.name -> f.dataType)
+    val declared = layout(SetSimJoin.indexSchema)
+    assert(layout(rebuilt.schema) == declared)
+    assert(layout(SetSimJoin.mergeIntoIndex(b1.toDF("doc_id", "text"),
+      "doc_id", "text", SetSimJoin.prefixIndex(b0.toDF("doc_id", "text"),
+        "doc_id", "text", T), T).schema) == declared)
     val probeBatch = fixture(4, 62).map { case (i, t) => (i + 1000L, t) }
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("new_id", "old_id").as[(Long, Long)].collect().toSet

@@ -279,6 +279,58 @@ class KnnSpec extends SparkSpec {
       == norm(online))
   }
 
+  test("IVF index upsert: a crash between a partition's delete and its " +
+      "rename is finished by the retry, not lost") {
+    import graft.sources.IvfIndex
+    import spark.implicits._
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    def copyTree(from: Path, to: Path): Unit =
+      Files.walk(from).iterator().asScala.toList.foreach { p =>
+        val q = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(q)
+        else Files.copy(p, q)
+      }
+    def deleteTree(p: Path): Unit =
+      Files.walk(p).iterator().asScala.toList.reverse.foreach(Files.delete)
+    def rows(idx: IvfIndex) =
+      idx.assignments.select("id", "cid", "vec").as[(Long, Long, Seq[Float])]
+        .collect().toSet
+    val root = Files.createTempDirectory("ivfcrash")
+    val (done, crashed) = (root.resolve("done"), root.resolve("crashed"))
+    IvfIndex.build(emb, done.toString, "vec_id", "embedding",
+      nCentroids = 6, iters = 2)
+    copyTree(done, crashed) // the pre-upsert state
+    val donor = emb.filter(col("vec_id") === 400L)
+      .select(col("embedding")).as[Seq[Float]].head()
+    val changes = emb.filter(col("vec_id") === 7L)
+      .select(lit(990001L).as("vec_id"), col("embedding"))
+      .unionByName(Seq((3L, donor)).toDF("vec_id", "embedding"))
+    val crashFree = new IvfIndex(spark, done.toString)
+    crashFree.upsert(changes, "vec_id", "embedding")
+    val want = rows(crashFree)
+    // The crash state: staging committed with the merged copy of every
+    // touched partition, and one touched live partition already deleted.
+    def byCid(dir: Path) =
+      rows(new IvfIndex(spark, dir.toString)).groupBy(_._2)
+    val (before, after) = (byCid(crashed), byCid(done))
+    val touched = (before.keySet ++ after.keySet)
+      .filter(c => before.get(c) != after.get(c)).toSeq.sorted
+    val staging = crashed.resolve("assignments_staging")
+    Files.createDirectories(staging)
+    touched.filter(after.contains).foreach(c =>
+      copyTree(done.resolve(s"assignments/cid=$c"), staging.resolve(s"cid=$c")))
+    Files.createFile(staging.resolve("_SUCCESS"))
+    val lost = touched.filter(c => before.contains(c) && after.contains(c)).head
+    deleteTree(crashed.resolve(s"assignments/cid=$lost"))
+    val retried = new IvfIndex(spark, crashed.toString)
+    retried.upsert(changes, "vec_id", "embedding")
+    val got = rows(retried)
+    assert(got == want, s"${(want -- got).size} crash-free rows missing, " +
+      s"${(got -- want).size} extra")
+    assert(!Files.exists(staging))
+  }
+
   // the q34/q35 scratch-oracle decomposition: candidates + exactRerank
   // must reproduce the fused topK forms (same neighbors, same rank order
   // up to 6-decimal rounded-sim ranking — the q94 determinism contract)
