@@ -14,11 +14,11 @@ import graft.functions.{cosine_similarity, simhash64}
   * expressions), (2) a groupBy/equi-join on a bucket key, (3) exact
   * verification only within buckets. The only shuffles are on signature
   * keys. Skew has TWO layers of defense: AQE skew splits repartition an
-  * oversized shuffle partition (a physical fix), and [[capBucketMembers]]
-  * bounds the MEMBER COUNT of any single bucket (an algorithmic fix) —
-  * without the latter, a boilerplate-heavy corpus putting B near-identical
-  * docs into one band bucket emits B² candidate pairs no matter how AQE
-  * splits the partitions.
+  * oversized shuffle partition (a physical fix), and [[cappedPairs]]
+  * bounds the MEMBER COUNT of any single bucket that pairs all-to-all (an
+  * algorithmic fix) — without the latter, a boilerplate-heavy corpus
+  * putting B near-identical docs into one band bucket emits B² candidate
+  * pairs no matter how AQE splits the partitions.
   */
 object Dedup {
 
@@ -30,86 +30,60 @@ object Dedup {
     * genuinely pathological. */
   val DefaultBucketCap: Int = 4096
 
-  /** Hybrid per-bucket cap — the guard that keeps one degenerate LSH
-    * bucket (B near-identical members → B² candidate pairs) from going
-    * quadratic regardless of AQE partition splitting.
+  /** Capped candidate pairs of one bucketing — the guard that keeps one
+    * degenerate LSH bucket (B near-identical members → B² pairs) from
+    * going quadratic regardless of AQE partition splitting. `rows` carries
+    * `bucketCols`, `id` and `payloadCols`.
     *
-    * Members of each bucket (the group of `bucketCols`) are ranked by
-    * (xxhash64(`idCol`), `idCol`) — hash-ordered, so the split is not
-    * biased toward low ids and is identical across runs for the same id
-    * set. The first `cap` members return in `kept` and flow into the
-    * caller's standard intra-bucket self-join (≤ cap² pairs per bucket,
-    * EXACT semantics for every bucket at or below the cap); every member
-    * BEYOND the cap returns in `star` as ONE pair with the bucket's
-    * rank-1 representative (ids normalized `id_a < id_b`; the payload
-    * structs `pay_a`/`pay_b` swap to match), so an oversized bucket costs
-    * O(B) star pairs instead of B². Because same-bucket members share the
-    * band signature by construction, a boilerplate bucket of identical
-    * docs still verifies member-by-member against the representative and
-    * collapses to ONE canonical cluster — nothing is dropped, only
-    * non-representative pairings among the tail are skipped (pairs the
-    * verification stage would mostly confirm as copies of the kept ones).
+    * One window, partitioned by the bucket and ordered by (xxhash64(id),
+    * id) — hash-ordered, so the split is not biased toward low ids and is
+    * identical across runs for the same id set — ranks each member and
+    * names the bucket's rank-1 representative. Members ranked ≤ `cap`
+    * pair all-to-all on the bucket key (`id_b > id_a`; EXACT for every
+    * bucket at or below the cap); each member ranked beyond the cap pairs
+    * ONCE with the representative, so an oversized bucket costs
+    * C(cap, 2) + (B − cap) pairs instead of C(B, 2). Same-bucket members
+    * share the band signature by construction, so a boilerplate bucket
+    * still verifies member-by-member against the representative and
+    * collapses to ONE canonical cluster; only non-representative
+    * pairings among the tail are skipped. The self-join reads the
+    * window's output, which is already hash-partitioned and sorted by the
+    * bucket key, so it adds no shuffle of its own.
     *
-    * NEVER silent: the aggregated per-bucket counts carry a
-    * `Dataset.observe` counter `metricName` with `demoted_members`
-    * (members moved from all-pairs to star linkage) and
-    * `max_bucket_members` (the pre-cap maximum), harvestable via
-    * [[graft.operators.ObservedMetrics]].
+    * NEVER silent: the ranked rows carry a `Dataset.observe` counter
+    * `metricName` with `demoted_members` (members ranked beyond the cap)
+    * and `max_bucket_members` (the largest bucket, pre-cap), harvestable
+    * via [[graft.operators.ObservedMetrics]].
     *
-    * Caching: `base` (the bucketed rows) and `hot` (the oversized keys)
-    * are cached — base is scanned by the count, the two split joins, and
-    * the caller's self-join; there is no unpersist hook because the
-    * returned frames are consumed lazily (the round-2 `banded.cache()`
-    * convention: dead entries fall to Spark's LRU under memory pressure,
-    * MEMORY_AND_DISK so eviction never recomputes mid-job).
-    *
-    * @return (kept, star): kept = (`bucketCols`*, `idCol`, `payloadCols`*);
-    *         star = (`bucketCols`*, id_a, id_b, pay_a, pay_b) with
-    *         pay_a/pay_b structs of `payloadCols` (a dummy field when
-    *         empty — callers select only the ids). */
-  def capBucketsStar(df: DataFrame, bucketCols: Seq[String], idCol: String,
-      payloadCols: Seq[String], cap: Int, metricName: String)
-      : (DataFrame, DataFrame) = {
+    * @return (id_a, id_b, `p`_a, `p`_b for each `p` in `payloadCols`):
+    *         id_a < id_b on star pairs, and each payload follows its id. */
+  private[dedup] def cappedPairs(rows: DataFrame, bucketCols: Seq[String],
+      payloadCols: Seq[String], cap: Int, metricName: String): DataFrame = {
     require(cap > 0, s"bucket cap must be positive, got $cap")
-    val pay = if (payloadCols.nonEmpty) struct(payloadCols.map(col): _*)
-              else struct(lit(0L).as("__none"))
-    // Two-phase shape so the COMMON case (no bucket over the cap) pays no
-    // per-row window sort: a map-side-combined count finds the oversized
-    // bucket KEYS (≤ N/cap of them by pigeonhole — usually zero), and only
-    // rows in those buckets go through the ranked split. The observe
-    // counters ride on the aggregated counts — one row per bucket, exact.
-    val base = df
-      .select(bucketCols.map(col) ++ Seq(col(idCol).as("__id"), pay.as("__pay")): _*)
-      .cache()
-    val hot = base.groupBy(bucketCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-      .observe(metricName,
-        sum(when(col("__n") > cap, col("__n") - cap).otherwise(0L))
-          .as("demoted_members"),
-        max(col("__n")).as("max_bucket_members"))
-      .filter(col("__n") > cap)
-      .select(bucketCols.map(col): _*)
-      .cache()
     val w = Window.partitionBy(bucketCols.map(col): _*)
-      .orderBy(xxhash64(col("__id")), col("__id"))
-    val ranked = base.join(hot, bucketCols, "left_semi")
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__rep_id", first(col("__id")).over(w))
-      .withColumn("__rep_pay", first(col("__pay")).over(w))
-    def unpack(d: DataFrame) =
-      d.select(bucketCols.map(col) ++ Seq(col("__id").as(idCol)) ++
-        payloadCols.map(p => col(s"__pay.$p").as(p)): _*)
-    val kept = unpack(base.join(hot, bucketCols, "left_anti"))
-      .unionByName(unpack(ranked.filter(col("__rn") <= cap)))
+      .orderBy(xxhash64(col("id")), col("id"))
+    // one select, so the rank and the representative share one Window
+    val ranked = rows
+      .select(col("*") +: row_number().over(w).as("__rn") +:
+        (("id" +: payloadCols).map(c => first(col(c)).over(w).as(s"__rep_$c"))): _*)
+      .observe(metricName,
+        count_if(col("__rn") > cap).as("demoted_members"),
+        max(col("__rn")).as("max_bucket_members"))
+    def side(s: String) = ranked.filter(col("__rn") <= cap)
+      .select(bucketCols.map(col) ++ (col("id").as(s"id_$s") +:
+        payloadCols.map(p => col(p).as(s"${p}_$s"))): _*)
+    val out = Seq("id_a", "id_b") ++ payloadCols.flatMap(p => Seq(s"${p}_a", s"${p}_b"))
+    val kept = side("a").join(side("b"), bucketCols)
+      .filter(col("id_b") > col("id_a"))
+      .select(out.map(col): _*)
+    val lo = col("id") < col("__rep_id")
     val star = ranked.filter(col("__rn") > cap)
-      .select(bucketCols.map(col) ++ Seq(
-        least(col("__id"), col("__rep_id")).as("id_a"),
-        greatest(col("__id"), col("__rep_id")).as("id_b"),
-        when(col("__id") < col("__rep_id"), col("__pay"))
-          .otherwise(col("__rep_pay")).as("pay_a"),
-        when(col("__id") < col("__rep_id"), col("__rep_pay"))
-          .otherwise(col("__pay")).as("pay_b")): _*)
-    (kept, star)
+      .select(Seq(least(col("id"), col("__rep_id")).as("id_a"),
+          greatest(col("id"), col("__rep_id")).as("id_b")) ++
+        payloadCols.flatMap(p => Seq(
+          when(lo, col(p)).otherwise(col(s"__rep_$p")).as(s"${p}_a"),
+          when(lo, col(s"__rep_$p")).otherwise(col(p)).as(s"${p}_b"))): _*)
+    kept.unionByName(star)
   }
 
   /** Whitespace tokens. */
@@ -121,10 +95,6 @@ object Dedup {
     * explode; WordShingles pins exact parity with it). */
   def shingles(text: Column, k: Int = 3): Column =
     graft.functions.word_shingles(tokens(text), k)
-
-  /** Salted-md5 MinHash signature (one value per salt). */
-  def minhash(text: Column, salt: String, k: Int = 3): Column =
-    array_min(transform(shingles(text, k), s => md5(concat(lit(salt), s))))
 
   /** Exact dedup: keep the minimum-id row per content hash.
     * @return (id, keep_id, is_duplicate) mapping for every input row */
@@ -143,8 +113,8 @@ object Dedup {
     *
     * Performance shape (this was a 72s→~2s rewrite at sf0.1): shingle
     * hashes (xxhash64, native) are computed ONCE per doc into one array;
-    * each of the bands×rows minima reads that array; the signature frame is
-    * cached so the self-join does not recompute it per side; candidate
+    * each of the bands×rows minima reads that array; both sides of the
+    * bucket self-join read the cap window's one shuffle; candidate
     * pairs are deduped on (id_a, id_b) BEFORE tokens are re-joined for the
     * exact-Jaccard verification — token arrays never travel through the
     * band explode or the join. */
@@ -162,18 +132,11 @@ object Dedup {
     * scratch table both engines read). */
   def minhashLshCandidates(df: DataFrame, idCol: String, textCol: String,
       bands: Int = 4, rowsPerBand: Int = 2,
-      bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val (kept, star) = capBucketsStar(
-      minhashBandBuckets(df, idCol, textCol, bands, rowsPerBand),
-      Seq("band", "bucket"), "id", Nil, bucketCap, "minhash_bucket_cap")
-    kept.select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(kept.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_b") > col("id_a"))
+      bucketCap: Int = DefaultBucketCap): DataFrame =
+    cappedPairs(minhashBandBuckets(df, idCol, textCol, bands, rowsPerBand),
+        Seq("band", "bucket"), Nil, bucketCap, "minhash_bucket_cap")
       .select(col("id_a"), col("id_b"))
-      .unionByName(star.select(col("id_a"), col("id_b")))
       .distinct()
-  }
 
   /** The (id, band, bucket) rows of [[minhashLshCandidates]]'s banding —
     * public because it doubles as the STORED INDEX of incremental dedup:
@@ -266,23 +229,15 @@ object Dedup {
     * hot-bucket star cap. Shared by SimHash text near-dup and the
     * perceptual image aHash ([[graft.multimodal.PerceptualHash]]). */
   def fingerprintCandidates(fp: DataFrame,
-      bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val (kept, star) = capBucketsStar(
-      fp.select(col("id"), col("fp"),
-        explode(array((0 until 4).map(i =>
-          struct(lit(i).as("chunk"),
-            shiftrightunsigned(col("fp"), i * 16).bitwiseAND(lit(0xffffL)).as("key"))): _*)).as("ck"))
-        .select(col("id"), col("fp"), col("ck.chunk").as("chunk"), col("ck.key").as("key")),
-      Seq("chunk", "key"), "id", Seq("fp"), bucketCap, "simhash_bucket_cap")
-    val a = kept.select(col("chunk"), col("key"), col("id").as("id_a"), col("fp").as("fp_a"))
-    val b = kept.select(col("chunk"), col("key"), col("id").as("id_b"), col("fp").as("fp_b"))
-    a.join(b, Seq("chunk", "key"))
-      .filter(col("id_b") > col("id_a"))
-      .select(col("id_a"), col("id_b"), col("fp_a"), col("fp_b"))
-      .unionByName(star.select(col("id_a"), col("id_b"),
-        col("pay_a.fp").as("fp_a"), col("pay_b.fp").as("fp_b")))
+      bucketCap: Int = DefaultBucketCap): DataFrame =
+    cappedPairs(
+        fp.select(col("id"), col("fp"),
+          explode(array((0 until 4).map(i =>
+            struct(lit(i).as("chunk"),
+              shiftrightunsigned(col("fp"), i * 16).bitwiseAND(lit(0xffffL)).as("key"))): _*)).as("ck"))
+          .select(col("id"), col("fp"), col("ck.chunk").as("chunk"), col("ck.key").as("key")),
+        Seq("chunk", "key"), Seq("fp"), bucketCap, "simhash_bucket_cap")
       .distinct()
-  }
 
   /** The verification half of [[simhashNearDup]]: exact hamming distance
     * over candidate fingerprint pairs, kept when ≤ `maxHamming`. */
@@ -362,19 +317,11 @@ object Dedup {
     * of a 0.5e-9 rounding boundary". */
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
       bucketCol: String, threshold: Double,
-      bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val (kept, star) = capBucketsStar(
-      df.select(col(bucketCol).as("bucket"), col(idCol).as("id"), col(vecCol).as("vec")),
-      Seq("bucket"), "id", Seq("vec"), bucketCap, "embedding_bucket_cap")
-    val a = kept.select(col("bucket"), col("id").as("id_a"), col("vec").as("vec_a"))
-    val b = kept.select(col("bucket"), col("id").as("id_b"), col("vec").as("vec_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_b") > col("id_a"))
-      .select(col("id_a"), col("id_b"), col("vec_a"), col("vec_b"))
-      .unionByName(star.select(col("id_a"), col("id_b"),
-        col("pay_a.vec").as("vec_a"), col("pay_b.vec").as("vec_b")))
+      bucketCap: Int = DefaultBucketCap): DataFrame =
+    cappedPairs(
+        df.select(col(bucketCol).as("bucket"), col(idCol).as("id"), col(vecCol).as("vec")),
+        Seq("bucket"), Seq("vec"), bucketCap, "embedding_bucket_cap")
       .select(col("id_a"), col("id_b"),
         cosine_similarity(col("vec_a"), col("vec_b")).as("sim"))
       .filter(graft.queries.oround(col("sim"), 9) >= threshold)
-  }
 }

@@ -37,7 +37,8 @@ import org.apache.spark.sql.types.StructType
   * Degenerate bound (documented, inherent to EXACTNESS): on a corpus of
   * N verbatim-identical documents the ANSWER is C(N, 2) pairs, so no
   * exact algorithm beats quadratic OUTPUT there — the capped/approximate
-  * path for such corpora is `Dedup.capBucketsStar` + canonicalization.
+  * path for such corpora is `Dedup.minhashLsh` (its per-bucket member
+  * cap) + canonicalization.
   */
 object SetSimJoin {
 

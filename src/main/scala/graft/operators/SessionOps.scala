@@ -27,20 +27,23 @@ object SessionOps {
   }
 
   /** Embedding enrichment (SURVEY §2.9 op 56: batched embedder behind the
-    * trait seam; the reference batches ≤100 texts per call).
+    * trait seam; the reference batches ≤100 texts per call): appends the
+    * `embedding` of each row's `textCol` — `description` for sessions,
+    * `interest` for the old path's exploded interests.
     *
-    * `Dataset.mapPartitions` with an explicit Row encoder, not an
-    * `sessions.rdd` hop: the enrichment stays one node inside the Dataset
+    * `Dataset.mapPartitions` with an explicit Row encoder, not a
+    * `rows.rdd` hop: the enrichment stays one node inside the Dataset
     * plan (Deserialize → map → Serialize), so upstream and downstream
     * stages keep Tungsten rows and whole-stage codegen instead of crossing
     * a createDataFrame scan barrier. */
-  def withEmbeddings(sessions: DataFrame, embedder: Embedder, batchSize: Int = 100): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(sessions.schema.fields :+
+  def withEmbeddings(rows: DataFrame, textCol: String, embedder: Embedder,
+      batchSize: Int = 100): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType(rows.schema.fields :+
       org.apache.spark.sql.types.StructField("embedding",
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, containsNull = false)))
-    sessions.mapPartitions { it =>
+    rows.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
-        val embs = embedder.embed(batch.map(_.getAs[String]("description")))
+        val embs = embedder.embed(batch.map(_.getAs[String](textCol)))
         batch.iterator.zip(embs.iterator).map { case (row, emb) =>
           org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (emb.toSeq: Seq[Float]))
         }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.cluster.LocalCluster
 import graft.enrich.{Embedder, LLMClient}
-import graft.operators.InterestsExtract
+import graft.operators.{InterestsExtract, SessionOps}
 
 /** The reference's old/full path end-to-end (SURVEY §3 EP3): activity →
   * two-turn interest extraction → explode → embed → per-user clustering.
@@ -21,22 +21,10 @@ object OldPath {
       chunkSize: Int = 15, eps: Double = 0.02, minClusterSize: Int = 5): Outputs = {
     val interests = InterestsExtract.interests(activity, llm, chunkSize).cache()
 
-    val exploded = interests
-      .select(col("user_id"), explode(col("interests")).as("interest"))
-      .distinct()
-
-    val spark = exploded.sparkSession
-    import spark.implicits._
-    val embedded = exploded
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(100).flatMap { batch =>
-          val embs = embedder.embed(batch.map(_._2))
-          batch.iterator.zip(embs.iterator).map { case ((u, i), e) => (u, i, e.toSeq) }
-        }
-      }
-      .toDF("user_id", "interest", "embedding")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
+    val embedded = SessionOps.withEmbeddings(
+        interests.select(col("user_id"), explode(col("interests")).as("interest"))
+          .distinct(),
+        "interest", embedder)
       .cache()
 
     val clusters = LocalCluster.clusterPerKey(

@@ -32,7 +32,7 @@ object RecentPath {
       chunkSize: Int = 15): Outputs = {
     val sessions = SessionOps.withEmbeddings(
         SessionOps.withIds(Sessionize.sessions(activity, llm, chunkSize)),
-        embedder)
+        "description", embedder)
       .cache()
     val thresholds = SessionOps.thresholds(sessions).cache()
     new Outputs(

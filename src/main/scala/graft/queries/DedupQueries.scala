@@ -577,8 +577,8 @@ object DedupQueries {
     // bind — on a degenerate corpus (> cap images sharing one 16-bit
     // chunk key) the capped path would drop non-representative pairs the
     // oracle reports. Int.MaxValue makes "never binds" a theorem rather
-    // than a property of the synthetic data (capBucketsStar's hot set is
-    // empty for any input with < 2^31 rows per bucket); capped-path
+    // than a property of the synthetic data (no bucket ranks past the cap
+    // for any input with < 2^31 rows per bucket); capped-path
     // parity is pinned separately where the oracle replays the cap (q57).
     graft.multimodal.PerceptualHash
       .nearDupPairs(graft.multimodal.PerceptualHash.aHashes(media),

@@ -118,7 +118,7 @@ object PipelineQueries {
         graft.operators.SessionOps.withIds(
           graft.operators.Sessionize.sessions(activity(s, d),
             new StubSessionsLLM)),
-        new StubEmbedder)
+        "description", new StubEmbedder)
     }
 
   /** Array columns are flattened to CSV strings in the q50/q51/q53 outputs:

@@ -2978,7 +2978,7 @@ object TextQueries {
     * global Jaccard (q44's metric) is tiny — the partial-copy case
     * global dedup structurally misses. Ubiquitous prints (> 20 docs)
     * are dropped first — MOSS's noise rule, and the join bound: kept
-    * pairs ≤ cap · |prints| (the capBucketsStar argument, answered here
+    * pairs ≤ cap · |prints| (the LSH bucket-cap argument, answered here
     * by an idf-style filter instead of a star rewrite because dropped
     * prints are NOISE, not candidates someone must still see). The
     * oracle replays the full FNV-1a winnowing (q48's chain), the

@@ -139,32 +139,57 @@ class DedupSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L)))
   }
 
-  test("capBucketsStar: deterministic split, payload orientation, observe counter") {
+  test("cappedPairs: deterministic split, payload orientation, observe counter") {
     val df = (1L to 10L).map(i => (0, i, i * 10)).toDF("b", "id", "v")
-    val (kept, star) = Dedup.capBucketsStar(df, Seq("b"), "id", Seq("v"), 3, "t_cap")
-    val keptIds = kept.select("id").as[Long].collect().toSet
-    assert(keptIds.size == 3)
-    val starRows = star.select(col("id_a"), col("id_b"),
-      col("pay_a.v").as("va"), col("pay_b.v").as("vb")).collect()
-    assert(starRows.length == 7)
-    starRows.foreach { r =>
-      val (a, b2, va, vb) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    // the cap window's order, ranked independently: (xxhash64(id), id)
+    val order = df.select(col("id"), xxhash64(col("id"))).as[(Long, Long)]
+      .collect().sortBy(r => (r._2, r._1)).map(_._1)
+    val keptIds = order.take(3).toSet
+    val pairs = Dedup.cappedPairs(df, Seq("b"), Seq("v"), 3, "t_cap")
+    val rows = pairs.select("id_a", "id_b", "v_a", "v_b")
+      .as[(Long, Long, Long, Long)].collect()
+    rows.foreach { case (a, b2, va, vb) =>
       assert(a < b2)
       assert(va == a * 10 && vb == b2 * 10) // payload follows its id through the swap
-      // one side of every star pair is the bucket's representative, which is kept
-      assert(keptIds.contains(a) || keptIds.contains(b2))
     }
-    // exactly ONE representative: all star pairs share it
-    val reps = starRows.map(r => if (keptIds.contains(r.getLong(0))) r.getLong(0) else r.getLong(1)).toSet
-    assert(reps.size == 1)
-    // never silent: the observe counter reports the demoted members
-    val m = graft.operators.ObservedMetrics.collect(kept).collect()
-      .map(r => r.getString(1) -> r.getDouble(2)).toMap
-    assert(m("demoted_members") == 7.0)
-    assert(m("max_bucket_members") == 10.0)
+    val (kept, star) = rows.partition { case (a, b2, _, _) => keptIds(a) && keptIds(b2) }
+    assert(kept.length == 3)
+    assert(star.length == 7)
+    // exactly ONE representative: every star pair links a tail member to
+    // it, and it is among the kept ids (the bucket's rank-1 member)
+    val reps = star.map(r => if (keptIds(r._1)) r._1 else r._2).toSet
+    assert(reps == Set(order.head))
+    assert(star.map(r => if (keptIds(r._1)) r._2 else r._1).toSet == order.drop(3).toSet)
+    // never silent: the observe counter reports the demoted members, on
+    // this frame's first action and again on a second one
+    for (_ <- 1 to 2) {
+      val m = graft.operators.ObservedMetrics.collect(pairs).collect()
+        .map(r => r.getString(1) -> r.getDouble(2)).toMap
+      assert(m("demoted_members") == 7.0)
+      assert(m("max_bucket_members") == 10.0)
+    }
     // determinism: a second run splits identically
-    val (kept2, _) = Dedup.capBucketsStar(df, Seq("b"), "id", Seq("v"), 3, "t_cap2")
-    assert(kept2.select("id").as[Long].collect().toSet == keptIds)
+    val again = Dedup.cappedPairs(df, Seq("b"), Seq("v"), 3, "t_cap2")
+      .select("id_a", "id_b", "v_a", "v_b").as[(Long, Long, Long, Long)].collect()
+    assert(again.toSet == rows.toSet)
+  }
+
+  test("near-dup generators leave nothing cached") {
+    val sc = spark.sparkContext
+    val vecs = Seq((1L, 0, Seq(1f, 0f)), (2L, 0, Seq(0.99f, 0.1f)), (3L, 1, Seq(1f, 0f)))
+      .toDF("id", "bucket", "vec")
+    val before = sc.getPersistentRDDs.keySet.toSet
+    for (_ <- 1 to 2) Seq(
+        Dedup.minhashLshCandidates(docs, "doc_id", "text"),
+        Dedup.simhashCandidates(docs, "doc_id", "text"),
+        Dedup.embeddingNearDup(vecs, "id", "vec", "bucket", threshold = 0.9))
+      .foreach { df =>
+        df.collect()
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("InMemoryTableScan"), plan)
+      }
+    assert(sc.getPersistentRDDs.keySet.forall(before),
+      sc.getPersistentRDDs.values.map(_.toString).mkString("\n"))
   }
 
   test("bucket cap: degenerate all-identical corpus stays linear, still one canonical cluster") {
