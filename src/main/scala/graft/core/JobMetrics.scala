@@ -100,14 +100,9 @@ final class JobMetrics private (sc: SparkContext) extends SparkListener {
     }
   }
 
-  /** Block until the listener bus has delivered every event posted so far.
-    * An action's task-end and job-end events are posted before it returns,
-    * so after `drain()` the counters of every finished group are exact.
-    * `listenerBus` is `private[spark]`, hence the reflective call. */
-  def drain(): Unit = {
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
-  }
+  /** [[JobMetrics.drain]]: after it the counters of every finished group
+    * are exact. */
+  def drain(): Unit = JobMetrics.drain(sc)
 
   def layers(id: String): Layers = synchronized {
     val c = counters.getOrElse(id, new Counters)
@@ -137,5 +132,14 @@ object JobMetrics {
     val m = new JobMetrics(sc)
     sc.addSparkListener(m)
     m
+  }
+
+  /** Block until the listener bus has delivered every event posted so far
+    * (to every listener, the status store's included). An action's
+    * task-end and job-end events are posted before it returns.
+    * `listenerBus` is `private[spark]`, hence the reflective call. */
+  def drain(sc: SparkContext): Unit = {
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
   }
 }

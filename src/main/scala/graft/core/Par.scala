@@ -25,8 +25,10 @@ import org.apache.spark.sql.SparkSession
   * When the caller is interrupted the tag's jobs are cancelled — again
   * every second until the drain completes, so a job a task starts after
   * the first cancel is cancelled too — and once every task has returned
-  * the interrupt is re-thrown as an InterruptedException. No write
-  * escapes behind the caller's unwind. */
+  * the interrupt is re-thrown as an InterruptedException. A task returns
+  * when Spark fails its cancelled job, which can be before the job's
+  * killed executor tasks have stopped: one may still be running, and
+  * writing, for a moment after `run` throws. */
 object Par {
   def run(tasks: (() => Unit)*): Unit = {
     val live = tasks.filterNot(_ == null)

@@ -73,4 +73,22 @@ object Chunker {
         }
       }
   }
+
+  /** [[chunks]] → `complete` → `(user_id, date, chunk_id, response)`: one
+    * `complete` call per partition batch of chunk rows, which returns one
+    * response per chunk in order — the LLM enrichment step of Sessionize
+    * (one turn) and InterestsExtract (two chained turns). */
+  def responses(activity: DataFrame, chunkSize: Int)
+      (complete: Seq[Seq[(String, String)]] => Seq[String]): DataFrame = {
+    val spark = activity.sparkSession
+    import spark.implicits._
+    chunks(activity, chunkSize)
+      .mapPartitions { it =>
+        val batch = it.toVector
+        if (batch.isEmpty) Iterator.empty
+        else batch.iterator.zip(complete(batch.map(_._4)).iterator)
+          .map { case ((u, d, c, _), resp) => (u, d, c, resp) }
+      }
+      .toDF("user_id", "date", "chunk_id", "response")
+  }
 }

@@ -6,7 +6,10 @@ import org.apache.spark.sql.functions._
 /** Connected components (SURVEY §2.4 op 24: the set-based replacement for
   * the reference's sequential UPDATE/DELETE merge loop,
   * assets/recent_history.py:413-447): driver-side union-find for small
-  * graphs, large-star / small-star contraction otherwise.
+  * graphs, large-star / small-star contraction otherwise. Its callers are
+  * whole-graph ones (Dedup, `GraphOps.components`, `VersionedCcIndex`);
+  * the recent path's session merge never crosses a user, so
+  * `SessionOps.merge` runs the same [[unionFind]] per user inside its plan.
   *
   * Semantics contract (SURVEY §2.4): merged sessions = connected components
   * of the *initial* candidate-pair graph — exactly what the reference's loop
@@ -33,11 +36,14 @@ object ConnectedComponents {
     */
   def components(edges: DataFrame, maxIter: Int = 50,
       localThreshold: Long = 1L << 20): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
     val e2 = edges.select(col("src"), col("dst")).cache()
     // both paths return a plan that no longer reads e2: the local one is
     // driver data, the distributed one starts from eager checkpoints
     try {
-      if (e2.count() <= localThreshold) localComponents(e2)
+      if (e2.count() <= localThreshold)
+        unionFind(e2.as[(Long, Long)].collect().iterator).toDF("id", "component")
       else starContraction(e2, maxIter)
     } finally e2.unpersist()
   }
@@ -117,12 +123,11 @@ object ConnectedComponents {
       .select(col("id"), coalesce(col("lbl"), col("id")).as("component"))
   }
 
-  /** Driver-side union-find for small graphs (min-id roots, identical
-    * output contract to the distributed path). */
-  private def localComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val pairs = edges.as[(Long, Long)].collect()
+  /** Union-find over an edge stream: `(id, component)` for every id an edge
+    * touches, component = the min id it reaches, sorted by id — the output
+    * contract of the distributed path. Pure: [[components]]' driver path
+    * and `SessionOps.merge`'s per-user groups call it. */
+  private[operators] def unionFind(edges: Iterator[(Long, Long)]): Seq[(Long, Long)] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -131,13 +136,12 @@ object ConnectedComponents {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    pairs.foreach { case (a, b) =>
+    edges.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
       val ra = find(a); val rb = find(b)
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    val out = parent.keys.toSeq.sorted.map(id => (id, find(id)))
-    spark.createDataFrame(out).toDF("id", "component")
+    parent.keys.toSeq.sorted.map(id => (id, find(id)))
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.enrich.LLMClient
 
@@ -29,25 +28,11 @@ object InterestsExtract {
     * the same `\[(.*?)\]` capture rule and hash-compare the counts. */
   private[graft] def parsedResponses(activity: DataFrame, llm: LLMClient,
       chunkSize: Int = 15): DataFrame = {
-    val spark = activity.sparkSession
-    import spark.implicits._
-
-    val chunks = Chunker.chunks(activity, chunkSize)
-
-    val responses = chunks
-      .mapPartitions { it =>
-        val batch = it.toVector
-        if (batch.isEmpty) Iterator.empty
-        else {
-          // two chained turns — the second prompt embeds the first response
-          val first = llm.complete(batch.map(b => firstPrompt(b._4)))
-          val second = llm.complete(
-            batch.zip(first).map { case (b, f) => secondPrompt(b._4, f) })
-          batch.iterator.zip(second.iterator).map { case ((u, d, c, _), resp) => (u, d, c, resp) }
-        }
-      }
-      .toDF("user_id", "date", "chunk_id", "response")
-
+    // two chained turns — the second prompt embeds the first response
+    val responses = Chunker.responses(activity, chunkSize) { rows =>
+      val first = llm.complete(rows.map(firstPrompt))
+      llm.complete(rows.zip(first).map { case (r, f) => secondPrompt(r, f) })
+    }
     parse(responses)
       .observe("interests",
         count(lit(1)).as("n_chunks"),

@@ -12,8 +12,8 @@ object SessionOps {
 
   /** Deterministic per-user session ids + epoch-second interval bounds.
     * id = (user_id mod 2^38) << 24 | per-user ordinal — globally unique so
-    * the connected-components label space needs no partition key, and
-    * overflow-safe under ANSI mode even for 64-bit hashed user keys
+    * a frame keyed by id alone (merge labels, graph edges) never mixes two
+    * users, and overflow-safe under ANSI mode even for 64-bit hashed user keys
     * (string users come in as xxhash64; the 38-bit fold keeps ids positive
     * — numeric user ids, the normal case, are far below the fold). */
   def withIds(sessions: DataFrame): DataFrame = {
@@ -88,41 +88,51 @@ object SessionOps {
     require(maxGapS <= Long.MaxValue / 1000000000L,
       s"maxGapS=$maxGapS overflows the 1e-9-grid gap compare " +
         s"(max ${Long.MaxValue / 1000000000L}s ≈ 292 years)")
-    val a = sessions.select(
-      col("user_id"), col("id").as("a_id"), col("date").as("a_date"),
-      col("start_s").as("a_start_s"), col("end_s").as("a_end_s"),
-      col("end_ts").as("a_end_ts"), col("embedding").as("a_emb"))
-    val b = sessions.select(
-      col("user_id"), col("id").as("b_id"), col("date").as("b_date"),
-      col("start_s").as("b_start_s"), col("start_ts").as("b_start_ts"),
-      col("embedding").as("b_emb"))
-    val ordering = (col("b_date") > col("a_date")) ||
-      (col("b_date") === col("a_date") && col("b_start_s") >= col("a_end_s"))
     val gap = col("b_start_ts") - col("a_end_ts")
-    val pairs = a.join(b, Seq("user_id"))
-      .where(gap >= -86400L && gap <= maxGapS && col("a_id") =!= col("b_id") && ordering)
-    def i9(c: Column): Column = graft.functions.fixed_point(c, 1e9)
-    pairs
+    orderedPairs(sessions, gap >= -86400L && gap <= maxGapS)
       .join(broadcast(thresholds), "user_id")
-      .withColumn("gap_s", col("b_start_ts") - col("a_end_ts"))
-      .withColumn("sim", cosine_similarity(col("a_emb"), col("b_emb")))
+      .withColumn("gap_s", gap)
+      .withColumn("sim", cosine_similarity(col("a_embedding"), col("b_embedding")))
       .filter(col("gap_s") * lit(1000000000L) <= i9(col("time_threshold_s"))
         && i9(col("sim")) >= i9(col("similarity_threshold")))
       .select(col("user_id"), col("a_id"), col("b_id"), col("gap_s"), col("sim"))
   }
+
+  /** The ordered self-join of both pair operators: every (a, b) of one user
+    * with a ≠ b and b starting at or after a ends (a later date, or the same
+    * date and `b.start_s ≥ a.end_s`, as in the reference's pair and graph
+    * queries), `band` in the same join condition; `a_`/`b_` columns. */
+  private def orderedPairs(sessions: DataFrame, band: Column): DataFrame = {
+    def side(p: String) = sessions.select(col("user_id") +:
+      Seq("id", "date", "start_s", "end_s", "start_ts", "end_ts", "embedding")
+        .map(c => col(c).as(s"${p}_$c")): _*)
+    side("a").join(side("b"), Seq("user_id"))
+      .where(band && col("a_id") =!= col("b_id") && (col("b_date") > col("a_date") ||
+        (col("b_date") === col("a_date") && col("b_start_s") >= col("a_end_s"))))
+  }
+
+  /** Integer fixed point at every threshold/rank compare (see
+    * [[similarityGraph]]). */
+  private def i9(c: Column): Column = graft.functions.fixed_point(c, 1e9)
 
   /** Set-based session merge (SURVEY §2.4 op 24): connected components over
     * the candidate-pair graph, then one interval aggregation per component —
     * the component's earliest session (min id) keeps its date, description
     * and interests; the interval becomes [least start, greatest end]
     * (GREATEST/LEAST semantics of the reference loop,
-    * assets/recent_history.py:420-445). */
+    * assets/recent_history.py:420-445). Pairs never cross users, so the
+    * components are labelled per user inside the plan (one `flatMapGroups`
+    * call of [[ConnectedComponents.unionFind]] per user's pairs): building
+    * the merge runs no Spark job. */
   def merge(sessions: DataFrame, pairs: DataFrame): DataFrame = {
-    val comps = ConnectedComponents.components(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
+    val spark = sessions.sparkSession
+    import spark.implicits._
+    val comps = pairs.select(col("user_id"), col("a_id"), col("b_id"))
+      .groupBy(col("user_id")).as[Long, (Long, Long, Long)]
+      .flatMapGroups((_, it) => ConnectedComponents.unionFind(it.map(p => (p._2, p._3))))
+      .toDF("sid", "component")
     val labeled = sessions
-      .join(comps.withColumnRenamed("id", "sid"),
-        sessions("id") === col("sid"), "left")
+      .join(comps, sessions("id") === col("sid"), "left")
       .withColumn("component", coalesce(col("component"), col("id")))
       .drop("sid")
     labeled
@@ -165,25 +175,14 @@ object SessionOps {
     * window (`TakeoutIngest`): at one session per chunk of up to 15 rows,
     * a user reaches 5,000 sessions only past ~75,000 activity rows in 15
     * days. */
-  def similarityGraph(sessions: DataFrame, thresholds: DataFrame): DataFrame = {
-    val a = sessions.select(
-      col("user_id"), col("id").as("parent_id"), col("date").as("a_date"),
-      col("end_s").as("a_end_s"), col("embedding").as("a_emb"))
-    val b = sessions.select(
-      col("user_id"), col("id").as("child_id"), col("date").as("b_date"),
-      col("start_s").as("b_start_s"), col("embedding").as("b_emb"))
-    val ordering = (col("b_date") > col("a_date")) ||
-      (col("b_date") === col("a_date") && col("b_start_s") >= col("a_end_s"))
-    // integer fixed point at the rank/threshold boundary (see scaladoc)
-    def i9(c: Column): Column = graft.functions.fixed_point(c, 1e9)
+  def similarityGraph(sessions: DataFrame, thresholds: DataFrame): DataFrame =
     // rank-1 per parent as a partial-aggregatable max(struct) instead of a
     // row_number window — map-side combine shrinks the O(pairs) shuffle to
     // one row per parent; lexicographic struct max = (similarity DESC,
     // child_id ASC) rank 1, identical to the reference's ROW_NUMBER filter.
-    a.join(b, Seq("user_id"))
-      .filter(col("parent_id") =!= col("child_id") && ordering)
-      .select(col("user_id"), col("parent_id"), col("child_id"),
-        i9(cosine_similarity(col("a_emb"), col("b_emb"))).as("sim_i9"))
+    orderedPairs(sessions, lit(true))
+      .select(col("user_id"), col("a_id").as("parent_id"), col("b_id").as("child_id"),
+        i9(cosine_similarity(col("a_embedding"), col("b_embedding"))).as("sim_i9"))
       .groupBy(col("user_id"), col("parent_id"))
       .agg(max(struct(col("sim_i9"),
         (lit(0L) - col("child_id")).as("nd"))).as("m"))
@@ -193,5 +192,4 @@ object SessionOps {
         (lit(0L) - col("m.nd")).as("child_id"),
         (lit(1000000000L) - col("m.sim_i9")).as("weight_ppb"),
         ((lit(1000000000L) - col("m.sim_i9")).cast("double") / lit(1e9)).as("weight"))
-  }
 }

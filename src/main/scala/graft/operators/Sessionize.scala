@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.enrich.LLMClient
@@ -54,23 +53,7 @@ object Sessionize {
     * utils/recent_history_utils.py:138-186) and hash-compare the counts. */
   private[graft] def validatedSnippets(activity: DataFrame, llm: LLMClient,
       chunkSize: Int = 15): DataFrame = {
-    val spark = activity.sparkSession
-    import spark.implicits._
-
-    val chunks = Chunker.chunks(activity, chunkSize)
-
-    val responses = chunks
-      .mapPartitions { it =>
-        val batch = it.toVector
-        if (batch.isEmpty) Iterator.empty
-        else {
-          val outs = llm.complete(batch.map(b => renderPrompt(b._4)))
-          batch.iterator.zip(outs.iterator).map { case ((u, d, c, _), resp) => (u, d, c, resp) }
-        }
-      }
-      .toDF("user_id", "date", "chunk_id", "response")
-
-    val exploded = responses
+    Chunker.responses(activity, chunkSize)(rows => llm.complete(rows.map(renderPrompt)))
       .select(col("user_id"), col("date"),
         explode(extract_json_objects(col("response"), explodeArrays = true)).as("snippet"))
       .withColumn("keys_ok",
@@ -83,8 +66,6 @@ object Sessionize {
         count(lit(1)).as("n_snippets"),
         sum(when(!col("keys_ok"), 1).otherwise(0)).as("invalid_keys"),
         sum(when(col("keys_ok") && !col("times_ok"), 1).otherwise(0)).as("invalid_times"))
-
-    exploded
   }
 
   /** @return sessions `(user_id, date, time_start "HH:mm", time_end "HH:mm",

@@ -21,7 +21,9 @@ import graft.similarity.Knn
   *  - `ann` = the pgvector `<=>` query surface: top-k cosine over the
   *    store, served by the engine's ANN operators.
   *
-  * Scale: one directory per user partition, `user_id=<escaped id>`.
+  * Scale: one directory per user partition, `user_id=<escaped id>`,
+  * holding one data file per write (`upsertUsers` clusters rows by user
+  * first, so a task never writes a file for every user it holds).
   * `load()` lists every partition (a parallel-listing job past Spark's
   * 32-path threshold) and infers the schema (a job); `loadUser` lists
   * only the user's own directory (the reference's `a.user_id = '<pk>'`
@@ -51,9 +53,9 @@ final class VectorStore(spark: SparkSession, path: String) {
     new Path(base, ExternalCatalogUtils.getPartitionPathString("user_id", userId))
 
   /** Overwrite exactly the user partitions present in `df` (must carry a
-    * `user_id` column). */
+    * `user_id` column), one data file per user partition. */
   def upsertUsers(df: DataFrame): Unit =
-    try df.write.mode("overwrite").partitionBy("user_id")
+    try df.repartition(df("user_id")).write.mode("overwrite").partitionBy("user_id")
       .option("partitionOverwriteMode", "dynamic") // write-scoped, no session leak
       .parquet(path)
     finally schemaCache = None

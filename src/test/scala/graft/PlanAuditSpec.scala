@@ -254,7 +254,7 @@ class PlanAuditSpec extends SparkSpec {
     // ConnectedComponents union-find fast path: edges collected ONLY below
     // the 2^20 gate; above it the star-contraction loop runs distributed
     // (ConnectedComponents.scala). The bound is data-independent config.
-    "q51_pipeline_merged", "q55_graph_stats", "q117_semantic_canonical",
+    "q55_graph_stats", "q117_semantic_canonical",
     "q129_curation_pipeline", // same CC union-find fast path under the gate
     // SketchTopK: the verify side re-counts a candidate list bounded by k
     // (sketch width), never by corpus size (SketchTopK.scala).

@@ -20,14 +20,24 @@ class ParSpec extends SparkSpec {
       try Par.run(endless(), endless())
       catch { case t: Throwable => thrown = t })
     caller.start()
-    def waitFor(what: String)(cond: => Boolean): Unit = {
+    // `pending` names what is still false; the status tracker reads a
+    // listener's store, so each poll first drains the listener bus
+    def waitFor(what: String)(pending: => Seq[String]): Unit = {
       val deadline = System.nanoTime() + 30_000_000_000L
-      while (!cond) {
-        assert(System.nanoTime() < deadline, s"timed out waiting for $what")
+      def poll() = { JobMetrics.drain(sc); pending }
+      var left = poll()
+      while (left.nonEmpty) {
+        assert(System.nanoTime() < deadline,
+          s"timed out waiting for $what; still: ${left.mkString("; ")}")
         Thread.sleep(20)
+        left = poll()
       }
     }
-    waitFor("both jobs to start")(sc.statusTracker.getActiveJobIds().length >= 2)
+    def activeJobs = sc.statusTracker.getActiveJobIds().toSeq
+    waitFor("both jobs to start") {
+      val jobs = activeJobs
+      if (jobs.length >= 2) Nil else Seq(s"active job ids ${jobs.mkString(",")}")
+    }
     val t0 = System.nanoTime()
     caller.interrupt()
     caller.join(10000)
@@ -35,8 +45,12 @@ class ParSpec extends SparkSpec {
     assert(!caller.isAlive && sec < 5.0, s"Par.run took $sec s after the interrupt")
     assert(thrown.isInstanceOf[InterruptedException], thrown)
     assert(finished.get == 2)
-    waitFor("the cancelled jobs to leave the status store")(
-      sc.statusTracker.getActiveJobIds().isEmpty &&
-        sc.statusTracker.getExecutorInfos.forall(_.numRunningTasks == 0))
+    waitFor("the cancelled jobs to leave the status store") {
+      val jobs = activeJobs
+      val busy = sc.statusTracker.getExecutorInfos.toSeq.filter(_.numRunningTasks > 0)
+        .map(e => s"${e.host}:${e.port} (${e.numRunningTasks})")
+      (if (jobs.isEmpty) Nil else Seq(s"active job ids ${jobs.mkString(",")}")) ++
+        (if (busy.isEmpty) Nil else Seq(s"executors with running tasks ${busy.mkString(", ")}"))
+    }
   }
 }

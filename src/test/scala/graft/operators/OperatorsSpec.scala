@@ -171,6 +171,104 @@ class SessionOpsSpec extends SparkSpec {
     assert(merged(0).getAs[Int]("end_s") == 39000) // extended over the chain
     assert(merged(0).getAs[Long]("n_merged") == 3)
     assert(merged(1).getAs[String]("description") == "d")
+
+    // Random users against a nested-loop reference: pairs by the
+    // candidate rule, components by min-label propagation, one interval
+    // per component. Each user also carries a chain (four sessions 600 s
+    // apart), a star (a centre and three mutually overlapping later
+    // sessions) and a cross-midnight pair whose first session ends past
+    // midnight, so the gap is negative.
+    val rnd = new scala.util.Random(29)
+    val users = 1L to 6L
+    val rows = users.flatMap { u =>
+      val random = (0 until 11).map { i =>
+        val day = 1 + rnd.nextInt(5)
+        val start = rnd.nextInt(40) * 1800
+        val v = Seq.fill(3)((1 + rnd.nextInt(3)).toFloat)
+        (u, f"2024-01-$day%02d", start, start + 600 + rnd.nextInt(3) * 600, s"r$u-$i", v)
+      }
+      val pv = Seq(1f, u.toFloat, 2f)
+      random ++ Seq(
+        (u, "2024-01-06", 36000, 36600, s"chain$u-0", pv),
+        (u, "2024-01-06", 37200, 37800, s"chain$u-1", pv),
+        (u, "2024-01-06", 38400, 39000, s"chain$u-2", pv),
+        (u, "2024-01-06", 39600, 40200, s"chain$u-3", pv),
+        (u, "2024-01-07", 32400, 43200, s"centre$u", pv),
+        (u, "2024-01-07", 43500, 44400, s"leaf$u-0", pv),
+        (u, "2024-01-07", 43800, 44700, s"leaf$u-1", pv),
+        (u, "2024-01-07", 43300, 45000, s"leaf$u-2", pv),
+        (u, "2024-01-08", 85000, 87000, s"late$u", pv),
+        (u, "2024-01-09", 300, 900, s"early$u", pv))
+    }
+    val rs = SessionOps.withIds(sessionsDf(rows: _*)).cache()
+    val th = users.map(u => (u, 900.0 + 300 * u, if (u % 2 == 0) 0.9 else 0.95))
+    val local = rs.select("user_id", "id", "date", "start_s", "end_s", "start_ts",
+        "end_ts", "description", "embedding")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDate(2).toLocalDate,
+        r.getInt(3), r.getInt(4), r.getLong(5), r.getLong(6), r.getString(7),
+        r.getSeq[Float](8).map(_.toDouble)))
+    def i9(x: Double): Long = { val v = x * 1e9; (math.signum(v) * math.floor(math.abs(v) + 0.5)).toLong }
+    def cos(x: Seq[Double], y: Seq[Double]): Double = {
+      val dot = x.zip(y).map { case (p, q) => p * q }.sum
+      dot / (math.sqrt(x.map(v => v * v).sum) * math.sqrt(y.map(v => v * v).sum))
+    }
+    val thOf = th.map(t => t._1 -> t).toMap
+    val refPairs = for {
+      a <- local; b <- local
+      if a._1 == b._1 && a._2 != b._2 &&
+        (b._3.isAfter(a._3) || (b._3 == a._3 && b._4 >= a._5))
+      gap = b._6 - a._7
+      if gap >= -86400L && gap <= 86400L &&
+        gap * 1000000000L <= i9(thOf(a._1)._2) && i9(cos(a._9, b._9)) >= i9(thOf(a._1)._3)
+    } yield (a._2, b._2)
+    val label = scala.collection.mutable.Map(local.map(s => s._2 -> s._2).toSeq: _*)
+    var changed = true
+    while (changed) {
+      changed = false
+      refPairs.foreach { case (a, b) =>
+        val m = math.min(label(a), label(b))
+        if (label(a) != m || label(b) != m) { label(a) = m; label(b) = m; changed = true }
+      }
+    }
+    val expected = local.groupBy(s => label(s._2)).map { case (c, ss) =>
+      val rep = ss.minBy(_._2)
+      (rep._1, c, rep._3.toString, ss.map(_._4).min, ss.map(_._5).max, rep._8, ss.length.toLong)
+    }.toSet
+    val got = SessionOps.merge(rs, SessionOps.candidatePairs(rs,
+        th.toDF("user_id", "time_threshold_s", "similarity_threshold")))
+      .select(col("user_id"), col("id"), col("date").cast("string"), col("start_s"),
+        col("end_s"), col("description"), col("n_merged"))
+      .as[(Long, Long, String, Int, Int, String, Long)].collect()
+    assert(got.length == got.toSet.size)
+    assert(got.toSet == expected)
+    // the reference exercised each case it is here for, in every user
+    for (u <- users) {
+      def comp(d: String) = label(local.find(_._8 == d).get._2)
+      assert((0 to 3).map(i => comp(s"chain$u-$i")).distinct.size == 1, u)
+      assert((0 to 2).map(i => comp(s"leaf$u-$i")).forall(_ == comp(s"centre$u")), u)
+      assert(comp(s"late$u") == comp(s"early$u"), u)
+    }
+    val byUser = expected.groupBy(_._1)
+    assert(byUser.keySet == users.toSet)
+    assert(byUser.values.forall(cs => cs.exists(_._7 == 1L) && cs.exists(_._7 >= 4L)))
+    rs.unpersist()
+  }
+
+  test("merge: building it runs no Spark job") {
+    val sess = SessionOps.withIds(sessionsDf(
+      (1L, "2024-01-01", 36000, 36600, "a", e1),
+      (1L, "2024-01-01", 37200, 37800, "b", e1),
+      (2L, "2024-01-01", 36000, 36600, "c", e1)))
+    val th = Seq((1L, 700.0, 0.9), (2L, 700.0, 0.9))
+      .toDF("user_id", "time_threshold_s", "similarity_threshold")
+    val sc = spark.sparkContext
+    val m = graft.core.JobMetrics.install(sc)
+    try {
+      val merged = m.group("build") { SessionOps.merge(sess, SessionOps.candidatePairs(sess, th)) }
+      m.drain()
+      assert(m.layers("build").jobs == 0L, m.layers("build"))
+      assert(merged.select("n_merged").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    } finally sc.removeSparkListener(m)
   }
 
   test("merge respects similarity threshold") {

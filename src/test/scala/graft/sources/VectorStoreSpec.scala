@@ -28,6 +28,21 @@ class VectorStoreSpec extends SparkSpec {
     assert(store.load().select("user_id").as[String].collect().toSeq == Seq("u1"))
   }
 
+  test("upsert writes one data file per user partition") {
+    val path = java.nio.file.Files.createTempDirectory("vstore1").toString + "/store"
+    val store = new VectorStore(spark, path)
+    // both users' rows spread round-robin over 4 input partitions
+    val rows = for (u <- Seq("u1", "u2"); i <- 0 until 8)
+      yield (u, i.toLong, Seq(i.toFloat, 1f))
+    store.upsertUsers(mk(rows: _*).repartition(4))
+    for (u <- Seq("u1", "u2")) {
+      val files = new java.io.File(s"$path/user_id=$u").listFiles()
+        .map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(files.length == 1, s"$u: ${files.toSeq}")
+      assert(store.loadUser(u).count() == 8)
+    }
+  }
+
   test("partition pruning reaches the file source for single-user loads") {
     val path = java.nio.file.Files.createTempDirectory("vstore2").toString + "/store"
     val store = new VectorStore(spark, path)
